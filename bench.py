@@ -1,96 +1,79 @@
 """Benchmark harness (driver contract): run every registered query at
 $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS]
 and print ONE JSON line:
-  {"metric": "...", "value": total_sec, "unit": "sec", "queries": {...}, "sf": ...}
+  {"metric": "...", "value": total_sec, "unit": "sec", "queries": {...}, "sf": ...,
+   "env": {master, default_parallelism, shuffle_partitions, host, nproc}}
 
-Each query is fully materialized via a count-style action (collect on the
-aggregated/limited ones would pull large row sets to the driver for the
-row-level operators; a noop-foreach materializes every row without driver
-transfer, matching how a sink would consume the result).
+Each query is fully materialized via a noop-sink write (collect would pull
+large row sets to the driver for the row-level operators; the noop sink
+materializes every row without driver transfer, matching how a sink would
+consume the result). Timing goes through the package's `obs` module, which
+also splits every query into build (plan construction) and exec seconds.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import statistics
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from t20_database_etl_pipeline_assignment_spark import obs  # noqa: E402
 from t20_database_etl_pipeline_assignment_spark.registry import QUERIES  # noqa: E402
-from t20_database_etl_pipeline_assignment_spark.session import get_spark  # noqa: E402
-from t20_database_etl_pipeline_assignment_spark.sources.staging import (  # noqa: E402
-    prune_stale_generations,
+
+# Queries whose first run materializes a staged artifact
+# (sources/staging.py), run once untimed so every query is timed probe-only
+# — production builds an index once and probes it many times. The build
+# cost is reported separately as index_build_sec.
+WARM = (
+    "dedup_minhash_lsh",            # resplit_documents + shingles3 + corpus band index
+    "dedup_cascade",                # shingles3_norm + normalized band index
+    "sim_ann_ivf",                  # ivf_centroids + ivf_assign
+    "sim_ann_ivf_adc",              # ivf_adc_codes (int8 inverted file)
+    "sim_ann_ivf_pq",               # ivf_pq_codebook + ivf_pq_codes
+    "cluster_connected_components", # jaccard_graph
+    "text_fingerprint",             # simhash_fp
+    "join_bucketed_colocated",      # bucketed warehouse build
+    # partitioned-at-rest fact copies + the DPP month dim (operators/
+    # partitioned.py): the one-time repartitioned landing-zone write
+    "scan_partitioned_pruned",              # partitioned lineitem
+    "sql_unshipped_revenue_topk_partitioned",  # partitioned orders
+    "stream_tumbling_partitioned",          # partitioned events
+    "join_dpp_month_dim",                   # month dim
+    # not an index: first Python-source/UDF use pays one-time Python
+    # worker bootstrap (~5 s), same class of cost as the JVM warmup
+    "scan_python_datasource",
 )
 
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
-    # startup-only cache hygiene: safe here (no in-flight job holds paths
-    # into a previous fixture generation), unsafe on every path resolution
-    prune_stale_generations(sf_dir)
-    spark = get_spark("t20-bench")
-    spark.sparkContext.setLogLevel("ERROR")
+    sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1])
+    spark = obs.session("t20-bench", sf_dir)
+    env = obs.run_environment(spark)
 
     # warm the JVM + parquet footers so per-query numbers measure the query,
     # not session bootstrap (one tiny action).
     QUERIES["join_multiway_star"](spark, sf_dir).count()
-
-    # Build the persisted per-fixture indexes ONCE, untimed, then time every
-    # query probe-only — production builds an index once and probes it many
-    # times, and the round-1 review asked for exactly this split ("split
-    # build/probe so bench measures query cost"). The build cost is honest
-    # and reported separately below as index_build_sec. Queries listed here
-    # are the ones whose first run materializes a staged artifact
-    # (sources/staging.py): the document re-split + shingle relation, the
-    # cascade's normalized shingles, the IVF centroids/assignments, the
-    # similarity graph, and the bucketed warehouse table.
-    t_build = time.perf_counter()
-    for warm_q in (
-        "dedup_minhash_lsh",            # resplit_documents + shingles3 + corpus band index
-        "dedup_cascade",                # shingles3_norm + normalized band index
-        "sim_ann_ivf",                  # ivf_centroids + ivf_assign
-        "sim_ann_ivf_adc",              # ivf_adc_codes (int8 inverted file)
-        "sim_ann_ivf_pq",               # ivf_pq_codebook + ivf_pq_codes
-        "cluster_connected_components", # jaccard_graph
-        "text_fingerprint",             # simhash_fp
-        "join_bucketed_colocated",      # bucketed warehouse build
-        # partitioned-at-rest fact copies + the DPP month dim (operators/
-        # partitioned.py): the one-time repartitioned landing-zone write
-        "scan_partitioned_pruned",              # partitioned lineitem
-        "sql_unshipped_revenue_topk_partitioned",  # partitioned orders
-        "stream_tumbling_partitioned",          # partitioned events
-        "join_dpp_month_dim",                   # month dim
-        # not an index: first Python-source/UDF use pays one-time Python
-        # worker bootstrap (~5 s), same class of cost as the JVM warmup
-        "scan_python_datasource",
-    ):
-        QUERIES[warm_q](spark, sf_dir).write.format("noop").mode("overwrite").save()
-    index_build = round(time.perf_counter() - t_build, 3)
+    index_build = round(obs.seconds(
+        lambda: [obs.noop(QUERIES[q](spark, sf_dir)) for q in WARM]), 3)
 
     # median-of-N passes (BASELINE.md documents ±25% ambient swing on this
     # box; medians make round-over-round deltas signal, not noise). Passes
     # interleave whole sweeps rather than repeating each query back-to-back
     # so a transient stall hits at most one pass of many queries.
     n_passes = int(os.environ.get("T20_BENCH_PASSES", "3"))
-    samples: dict[str, list[float]] = {name: [] for name in QUERIES}
+    reps: dict[str, list[obs.Rep]] = {name: [] for name in QUERIES}
     for _ in range(n_passes):
         for name in sorted(QUERIES):
-            fn = QUERIES[name]
-            t0 = time.perf_counter()
-            df = fn(spark, sf_dir)
-            df.write.format("noop").mode("overwrite").save()
-            samples[name].append(round(time.perf_counter() - t0, 3))
+            reps[name].append(obs.timed(lambda: QUERIES[name](spark, sf_dir)))
 
-    def median(xs: list[float]) -> float:
-        s = sorted(xs)
-        mid = len(s) // 2
-        return s[mid] if len(s) % 2 else round((s[mid - 1] + s[mid]) / 2, 3)
-
-    timings = {name: median(ts) for name, ts in samples.items()}
+    samples = {name: [round(r.total_s, 3) for r in rs] for name, rs in reps.items()}
+    timings = {name: round(statistics.median(ts), 3) for name, ts in samples.items()}
     spread = {name: [min(ts), max(ts)] for name, ts in samples.items()}
+    split = {name: list(obs.median_split(rs)) for name, rs in reps.items()}
     total = round(sum(timings.values()), 3)
     # Full per-query detail goes to disk; stdout carries one SHORT final
     # JSON line with only the slowest queries, so the driver's truncated
@@ -108,56 +91,40 @@ def main() -> None:
     # PREVIOUS detail record (read before we overwrite it) alongside the
     # previous record's time on that same subset. A flat/falling
     # common-subset pair means no regression regardless of surface growth.
-    # Comparable only at the SAME scale factor: a bench run at a different
-    # sf would otherwise silently record a meaningless prev-vs-now pair.
+    # Comparable only at the SAME scale factor and parallelism: otherwise
+    # the pair would silently compare, say, an 8-core run to a 32-core one.
     prev_common: dict[str, float] = {}
     try:
         with open(detail_path) as f:
-            prev_detail = json.load(f)
-        if float(prev_detail.get("sf", -1)) == float(sf):
-            prev_common = prev_detail.get("queries", {})
+            prev = json.load(f)
+        if (float(prev.get("sf", -1)), prev.get("env", {}).get("default_parallelism")) == (
+            sf, env["default_parallelism"]
+        ):
+            prev_common = prev.get("queries", {})
     except (OSError, ValueError):
-        prev_common = {}
+        pass
     common = sorted(set(timings) & set(prev_common))
-    subset = {
+    head = {
+        "metric": "total_query_wall_time",
+        "value": total,
+        "unit": "sec",
+        "n_passes": n_passes,
+        "index_build_sec": index_build,
+        "sf": sf,
+        "env": env,
         "common_subset_n": len(common),
         "common_subset_vs_prev_sec": round(sum(timings[q] for q in common), 3),
         "prev_common_subset_sec": round(sum(prev_common[q] for q in common), 3),
     }
     with open(detail_path, "w") as f:
         json.dump(
-            {
-                "metric": "total_query_wall_time",
-                "value": total,
-                "unit": "sec",
-                "queries": timings,
-                "queries_min_max": spread,
-                "n_passes": n_passes,
-                "index_build_sec": index_build,
-                "sf": float(sf),
-                **subset,
-            },
-            f,
-            indent=1,
-            sort_keys=True,
+            {**head, "queries": timings, "queries_min_max": spread,
+             "queries_build_exec": split},
+            f, indent=1, sort_keys=True,
         )
     top = dict(sorted(timings.items(), key=lambda kv: -kv[1])[:10])
-    print(
-        json.dumps(
-            {
-                "metric": "total_query_wall_time",
-                "value": total,
-                "unit": "sec",
-                "n_queries": len(timings),
-                "n_passes": n_passes,
-                "queries": top,
-                "index_build_sec": index_build,
-                "detail": "BENCH_DETAIL.json",
-                "sf": float(sf),
-                **subset,
-            }
-        )
-    )
+    print(json.dumps({**head, "n_queries": len(timings), "queries": top,
+                      "detail": "BENCH_DETAIL.json"}))
 
 
 if __name__ == "__main__":

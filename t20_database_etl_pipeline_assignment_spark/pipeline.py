@@ -50,6 +50,7 @@ from .operators.etl import (
     scd2_init,
 )
 from .sources.tables import table
+from .streaming.scd2_sink import recover_swap, swap_in
 
 log = logging.getLogger("t20spark.pipeline")
 
@@ -166,18 +167,13 @@ def _overwrite_in_place(spark: SparkSession, df: DataFrame, path: str) -> int:
     `cache().count()` is NOT a persistence guarantee — evicted blocks
     recompute from the source path mid-overwrite and can corrupt the
     target. Instead: write to a sibling temp dir (fully materializing the
-    plan against the still-intact source), then swap directories with two
-    renames. Readers never observe a partial state, and a crash between
-    the renames leaves a recoverable `.old`. Returns the new row count.
+    plan against the still-intact source), then `swap_in`. Returns the new
+    row count.
     """
-    tmp, old = path + ".tmp-swap", path + ".old"
+    tmp = path + ".tmp-swap"
     shutil.rmtree(tmp, ignore_errors=True)
     df.write.mode("overwrite").parquet(tmp)
-    shutil.rmtree(old, ignore_errors=True)
-    if os.path.exists(path):
-        os.rename(path, old)
-    os.rename(tmp, path)
-    shutil.rmtree(old, ignore_errors=True)
+    swap_in(tmp, path)
     return spark.read.parquet(path).count()
 
 
@@ -244,6 +240,9 @@ def run_etl(
 
     with _stage("load_events_incremental", metrics):
         ev_path = f"{target_dir}/events"
+        # a crash inside the last night's swap must not read as a first run:
+        # that would reload the source alone and drop the loaded history
+        recover_swap(ev_path)
         if os.path.exists(ev_path):
             loaded = spark.read.parquet(ev_path)
             merged = incr_load_watermark(loaded, events, ts_col="ts", id_col="event_id")

@@ -74,13 +74,29 @@ def _read_state(dim_path: str) -> dict | None:
         return None
 
 
-def recover_dim(dim_path: str) -> None:
-    """Heal the crash window between the two publish renames: if the live
-    dir is missing but its `.old` survivor exists, restore it."""
-    old = dim_path + ".old"
-    if not os.path.exists(dim_path) and os.path.exists(old):
-        os.rename(old, dim_path)
+def swap_in(tmp: str, path: str) -> None:
+    """Publish the fully written dir `tmp` as `path` with two renames.
+    Readers never observe a partial state; a crash between the renames
+    leaves `path` missing and the previous version at `path.old`, which
+    `recover_swap` restores."""
+    old = path + ".old"
+    shutil.rmtree(old, ignore_errors=True)
+    if os.path.exists(path):
+        os.rename(path, old)
+    os.rename(tmp, path)
+    shutil.rmtree(old, ignore_errors=True)
 
+
+def recover_swap(path: str) -> None:
+    """Heal the crash window between `swap_in`'s two renames: if the live
+    dir is missing but its `.old` survivor exists, restore it. Call before
+    anything tests whether `path` exists."""
+    old = path + ".old"
+    if not os.path.exists(path) and os.path.exists(old):
+        os.rename(old, path)
+
+
+recover_dim = recover_swap  # the sinks' name for it
 
 _SNAP_DIR = "_snaphead"  # leading "_": hidden from Spark's parquet reader
 
@@ -89,7 +105,7 @@ def atomic_swap_publish(
     df: DataFrame, dim_path: str, state: dict, snap: DataFrame | None = None
 ) -> dict[str, float]:
     """Write `df` + state marker (+ the head-day snapshot sidecar) to a
-    temp dir, then swap it live with two renames (same discipline as
+    temp dir, then swap it live with `swap_in` (same discipline as
     pipeline._overwrite_in_place, plus the marker travels INSIDE the
     published dir so dimension, sidecar, and batch_id are one atomic
     unit). Returns per-step wall seconds (dim/snap parquet write jobs,
@@ -108,7 +124,7 @@ def atomic_swap_publish(
     import time as _time
     from concurrent.futures import ThreadPoolExecutor
 
-    tmp, old = dim_path + ".tmp-swap", dim_path + ".old"
+    tmp = dim_path + ".tmp-swap"
     shutil.rmtree(tmp, ignore_errors=True)
     t0 = _time.perf_counter()
 
@@ -140,11 +156,7 @@ def atomic_swap_publish(
     t2 = _time.perf_counter()
     with open(os.path.join(tmp, _STATE_FILE), "w") as f:
         json.dump(state, f)
-    shutil.rmtree(old, ignore_errors=True)
-    if os.path.exists(dim_path):
-        os.rename(dim_path, old)
-    os.rename(tmp, dim_path)
-    shutil.rmtree(old, ignore_errors=True)
+    swap_in(tmp, dim_path)
     t3 = _time.perf_counter()
     return {
         "publish_dim_write": dim_sec,

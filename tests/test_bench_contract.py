@@ -11,6 +11,11 @@ import sys
 
 def test_bench_emits_contract_json(tmp_path):
     detail_path = str(tmp_path / "BENCH_DETAIL.json")
+    # a previous record at the same sf but another parallelism must not be
+    # compared against (an 8-core run is no baseline for a 32-core one)
+    with open(detail_path, "w") as f:
+        json.dump({"sf": 0.001, "env": {"default_parallelism": -1},
+                   "queries": {"join_multiway_star": 1.0}}, f)
     env = dict(
         os.environ,
         SPARK_GRAFT_SF_DIR="/root/testdata/sf0.001",
@@ -39,3 +44,17 @@ def test_bench_emits_contract_json(tmp_path):
         detail = json.load(f)
     assert payload["n_queries"] == len(detail["queries"]) >= 99
     assert detail["value"] == payload["value"]
+    assert payload["common_subset_n"] == 0
+    # what the run measured on, in both records
+    env_keys = {"master", "default_parallelism", "shuffle_partitions", "host", "nproc"}
+    assert set(payload["env"]) == env_keys
+    assert detail["env"] == payload["env"]
+    assert payload["env"]["default_parallelism"] >= 1
+    # per-query build/exec split, taken from the median rep: the two sum to
+    # the query's total within rounding
+    split = detail["queries_build_exec"]
+    assert set(split) == set(detail["queries"])
+    for q, total in detail["queries"].items():
+        build, exe = split[q]
+        assert build >= 0 and exe >= 0
+        assert abs(build + exe - total) <= 0.002, (q, build, exe, total)

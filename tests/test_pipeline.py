@@ -249,3 +249,42 @@ def test_band_swap_recovery_heals_any_crash_combination(states):
             for b, content in want.items():
                 with open(os.path.join(dim, f"_band={b}", "data.txt")) as f:
                     assert f.read() == content, (b, states)
+
+
+def test_events_swap_crash_keeps_loaded_history(spark, sf_dir, target_dir, tmp_path):
+    """A crash between the events swap's two renames leaves `events/`
+    missing and the loaded history at `events.old`. The next run must
+    restore it before deciding between first load and increment: a fresh
+    load from the current source alone would drop every loaded event the
+    source no longer carries, and the run after would delete the `.old`."""
+    import glob
+    import os
+
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    night1 = tmp_path / "night1"
+    night2 = tmp_path / "night2"
+    for d in (night1, night2):
+        d.mkdir()
+        for p in glob.glob(f"{sf_dir}/*.parquet"):
+            if not (d == night2 and p.endswith("/events.parquet")):
+                os.symlink(p, d / os.path.basename(p))
+    # night 2's source no longer carries the 100 lowest event ids
+    ev = pq.read_table(f"{sf_dir}/events.parquet")
+    cut = sorted(ev.column("event_id").to_pylist())[100]
+    pq.write_table(ev.filter(pc.greater_equal(ev["event_id"], cut)),
+                   night2 / "events.parquet")
+
+    run_etl(spark, str(night1), target_dir, batch_ts="2026-01-01 00:00:00")
+    ev_path = f"{target_dir}/events"
+    loaded = {r[0] for r in spark.read.parquet(ev_path).select("event_id").collect()}
+    assert len(loaded) == ev.num_rows
+
+    os.rename(ev_path, ev_path + ".old")  # crash between the two renames
+    m2 = run_etl(spark, str(night2), target_dir, batch_ts="2026-01-02 00:00:00")
+
+    after = {r[0] for r in spark.read.parquet(ev_path).select("event_id").collect()}
+    assert loaded <= after, f"{len(loaded - after)} loaded events lost"
+    assert m2["events_rows"] == len(after)
+    assert not os.path.exists(ev_path + ".old")

@@ -231,3 +231,55 @@ def test_fingerprints_are_checkout_portable(tmp_path):
     here = [dc._package_core_hash(),
             dc._module_hash(os.path.join(REPO, pkg, "operators", "llm.py"))]
     assert out == here, f"checkout-dependent fingerprints: {out} vs {here}"
+
+
+def test_non_query_modules_stay_out_of_query_import_closure():
+    """The contract fingerprint leaves drive_contract.NON_QUERY_MODULES out
+    of its package-core hash. That is sound only while no query can run
+    their code: the static import closure of every query-defining module
+    must not reach them."""
+    import inspect
+
+    import __spark_entry__ as ep
+    import drive_contract as dc
+
+    pkg = os.path.join(REPO, "t20_database_etl_pipeline_assignment_spark")
+    excluded = {os.path.join(pkg, n) for n in dc.NON_QUERY_MODULES}
+    todo = {inspect.getsourcefile(sys.modules[fn.__module__])
+            for fn in ep.queries().values()}
+    seen: set[str] = set()
+    while todo:
+        f = todo.pop()
+        seen.add(f)
+        todo |= dc.module_deps(f) - seen
+    assert len(seen) > 20
+    assert not seen & excluded, sorted(seen & excluded)
+
+
+def test_tools_import_without_starting_spark():
+    """Every tool and bench.py compiles and imports without starting a
+    SparkContext: a tool that rots after a refactor of what it imports, or
+    a new module-level session, fails here rather than on its next rare
+    run."""
+    import glob
+    import subprocess
+
+    paths = sorted(glob.glob(os.path.join(REPO, "tools", "*.py")))
+    paths.append(os.path.join(REPO, "bench.py"))
+    code = (
+        "import importlib.util, os, sys\n"
+        "from pyspark import SparkContext\n"
+        "sys.path[:0] = [os.path.dirname(sys.argv[1]), os.getcwd()]\n"
+        "for p in sys.argv[1:]:\n"
+        "    name = os.path.splitext(os.path.basename(p))[0]\n"
+        "    spec = importlib.util.spec_from_file_location(name, p)\n"
+        "    mod = importlib.util.module_from_spec(spec)\n"
+        "    sys.modules[name] = mod\n"
+        "    spec.loader.exec_module(mod)\n"
+        "    assert SparkContext._active_spark_context is None, p\n"
+        "print('imported', len(sys.argv) - 1)\n"
+    )
+    out = subprocess.run([sys.executable, "-c", code, *paths], cwd=REPO,
+                         capture_output=True, text=True, timeout=600)
+    assert out.returncode == 0, out.stderr[-2000:]
+    assert out.stdout.split()[-1] == str(len(paths))

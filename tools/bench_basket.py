@@ -41,10 +41,11 @@ import json
 import os
 import subprocess
 import sys
-import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
+
+from t20_database_etl_pipeline_assignment_spark import obs  # noqa: E402
 
 SF10_DEFAULT = os.path.join(REPO, ".scale_fixtures", "sf10")
 SF1_DEFAULT = os.path.join(REPO, ".scale_fixtures", "sf1")
@@ -204,8 +205,6 @@ def _variant_df(spark, sf_dir: str, variant: str):
 
 
 def _worker(variant: str, heap: str, parts: str, sf_dir: str) -> None:
-    import urllib.request
-
     from pyspark.sql import SparkSession
 
     spark = (
@@ -216,47 +215,17 @@ def _worker(variant: str, heap: str, parts: str, sf_dir: str) -> None:
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("ERROR")
-    df = _variant_df(spark, sf_dir, variant)
-    t0 = time.time()
-    rows = df.count()
-    wall = time.time() - t0
-    base = spark.sparkContext.uiWebUrl
-    app = spark.sparkContext.applicationId
-    time.sleep(1)  # listener-bus settle
-    with urllib.request.urlopen(
-        f"{base}/api/v1/applications/{app}/stages?status=complete", timeout=10
-    ) as r:
-        stages = json.load(r)
+    rep = obs.timed(lambda: _variant_df(spark, sf_dir, variant),
+                    action=lambda df: df.count(), spark=spark)
+    t = rep.stages
     rec = {
         "variant": variant,
         "heap": heap,
         "shuffle_partitions": int(parts),
-        "rows": rows,
-        "wall_sec": round(wall, 1),
-        "spill_disk_mb": round(
-            sum(s.get("diskBytesSpilled", 0) for s in stages) / 1e6
-        ),
-        "shuffle_write_mb": round(
-            sum(s.get("shuffleWriteBytes", 0) for s in stages) / 1e6
-        ),
-        "peak_stage_execution_memory_mb": round(
-            max((s.get("peakExecutionMemory", 0) for s in stages), default=0)
-            / 1e6
-        ),
-        "heavy_stages": [
-            {
-                "shuffle_write_mb": round(s.get("shuffleWriteBytes", 0) / 1e6),
-                "spill_disk_mb": round(s.get("diskBytesSpilled", 0) / 1e6),
-                "peak_execution_memory_mb": round(
-                    s.get("peakExecutionMemory", 0) / 1e6
-                ),
-                "name": s.get("name", "")[:60],
-            }
-            for s in sorted(stages, key=lambda x: x["stageId"])
-            if s.get("diskBytesSpilled", 0) > 1e6
-            or s.get("shuffleWriteBytes", 0) > 5e7
-            or s.get("peakExecutionMemory", 0) > 1e9
-        ],
+        "rows": rep.result,
+        "wall_sec": round(rep.exec_s, 1),
+        **{k: t.get(k) for k in ("spill_disk_mb", "shuffle_write_mb",
+                                 "peak_stage_execution_memory_mb", "heavy_stages")},
     }
     print("WORKER_JSON:" + json.dumps(rec), flush=True)
 

@@ -12,9 +12,9 @@ scan over (event_type, day) segments — local prefix/min per segment in
 parallel, a types*days-row carry relation combined with a tiny window,
 broadcast back — so parallelism scales with the log's TIME SPAN. This
 harness measures both formulations at the scale fixtures with per-stage
-telemetry and records the effective parallelism of the heaviest stage
-(executorRunTime / stage wall): the number that was pinned at ~5 and
-should now track min(#segments, #cores).
+telemetry (`obs.stage_telemetry`) and records the effective parallelism of
+the heaviest stage (executorRunTime / stage wall): the number that was
+pinned at ~5 and should now track min(#segments, #cores).
 
 Both variants are bit-identical by construction (integer cents; the
 hypothesis model-check in tests/test_analytics_ops.py proves the carry
@@ -32,11 +32,11 @@ import json
 import os
 import subprocess
 import sys
-import time
-from datetime import datetime
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
+
+from t20_database_etl_pipeline_assignment_spark import obs  # noqa: E402
 
 SF10_DEFAULT = os.path.join(REPO, ".scale_fixtures", "sf10")
 SF1_DEFAULT = os.path.join(REPO, ".scale_fixtures", "sf1")
@@ -108,101 +108,14 @@ def _segmented_df(spark, sf_dir: str):
     return QUERIES["win_cusum_drift"](spark, sf_dir)
 
 
-# ---------------------------------------------------------------------------
-# telemetry (worker side)
-# ---------------------------------------------------------------------------
-
-
-def _stages(spark) -> list[dict]:
-    import urllib.request
-
-    base = spark.sparkContext.uiWebUrl
-    app = spark.sparkContext.applicationId
-    url = f"{base}/api/v1/applications/{app}/stages?status=complete"
-    with urllib.request.urlopen(url, timeout=10) as r:
-        return json.load(r)
-
-
-def _ts_ms(s: str) -> float:
-    return datetime.strptime(s.replace("GMT", ""), "%Y-%m-%dT%H:%M:%S.%f").timestamp() * 1e3
-
-
-def _heaviest_stage(stages: list[dict]) -> dict:
-    """Effective parallelism of the stage that did the most executor work:
-    executorRunTime / (completion − first task launch). The flat kernel's
-    big window pins this near the event-type count; the segmented kernel
-    should track min(#segments, #cores)."""
-    if not stages:
-        return {}
-    s = max(stages, key=lambda x: x.get("executorRunTime", 0))
-    try:
-        wall_ms = _ts_ms(s["completionTime"]) - _ts_ms(s["firstTaskLaunchedTime"])
-    except (KeyError, ValueError):
-        wall_ms = 0.0
-    run_ms = s.get("executorRunTime", 0)
-    return {
-        "name": s.get("name", "")[:60],
-        "num_tasks": s.get("numTasks", 0),
-        "executor_run_ms": run_ms,
-        "stage_wall_ms": round(wall_ms),
-        "effective_parallelism": round(run_ms / wall_ms, 1) if wall_ms > 0 else None,
-    }
-
-
 def _worker(variant: str, sf_dir: str, passes: str) -> None:
-    os.environ["T20_UI_ENABLED"] = "true"
     from pyspark.sql import functions as F
 
-    from t20_database_etl_pipeline_assignment_spark.session import (
-        get_spark,
-        shuffle_partitions_for,
-    )
-    from t20_database_etl_pipeline_assignment_spark.sources.staging import (
-        prune_stale_generations,
-    )
-
-    prune_stale_generations(sf_dir)
-    spark = get_spark("t20-bench-cusum")
-    spark.sparkContext.setLogLevel("ERROR")
-    if "T20_SHUFFLE_PARTITIONS" not in os.environ:
-        spark.conf.set(
-            "spark.sql.shuffle.partitions", str(shuffle_partitions_for(sf_dir))
-        )
+    spark = obs.session("t20-bench-cusum", sf_dir, ui=True, scaled_partitions=True)
     fn = _flat_df if variant == "flat" else _segmented_df
-    # untimed warm pass: builds the staged events artifact + JIT
-    fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-    walls: list[float] = []
-    telem: dict = {}
-    n = int(passes)
-    for i in range(n):
-        mark = max((s["stageId"] for s in _stages(spark)), default=-1)
-        t0 = time.perf_counter()
-        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        walls.append(round(time.perf_counter() - t0, 3))
-        if i == n - 1:
-            time.sleep(1)  # listener-bus settle
-            stages = [s for s in _stages(spark) if s["stageId"] > mark]
-            telem = {
-                "n_stages": len(stages),
-                "shuffle_write_mb": round(
-                    sum(s.get("shuffleWriteBytes", 0) for s in stages) / 1e6, 1
-                ),
-                "shuffle_read_mb": round(
-                    sum(s.get("shuffleReadBytes", 0) for s in stages) / 1e6, 1
-                ),
-                "spill_memory_mb": round(
-                    sum(s.get("memoryBytesSpilled", 0) for s in stages) / 1e6, 1
-                ),
-                "spill_disk_mb": round(
-                    sum(s.get("diskBytesSpilled", 0) for s in stages) / 1e6, 1
-                ),
-                "peak_stage_execution_memory_mb": round(
-                    max((s.get("peakExecutionMemory", 0) for s in stages), default=0)
-                    / 1e6,
-                    1,
-                ),
-                "heaviest_stage": _heaviest_stage(stages),
-            }
+    # the warm rep builds the staged events artifact + JIT
+    reps = obs.measure(lambda: fn(spark, sf_dir), int(passes), spark=spark)
+    walls = [round(r.total_s, 3) for r in reps]
     # bit-identity cross-check: integer checksum of the statistic + alarms
     chk = (
         fn(spark, sf_dir)
@@ -216,12 +129,13 @@ def _worker(variant: str, sf_dir: str, passes: str) -> None:
     rec = {
         "variant": variant,
         "sf_dir": sf_dir,
+        "env": obs.run_environment(spark),
         "walls_sec": walls,
-        "median_sec": sorted(walls)[len(walls) // 2],
+        "median_sec": obs.summary(walls)["median"],
         "rows": chk.rows,
         "checksum_c": chk.checksum_c,
         "alarms": chk.alarms,
-        "telemetry": telem,
+        "telemetry": reps[-1].stages,
     }
     print("WORKER_JSON:" + json.dumps(rec), flush=True)
 
@@ -259,9 +173,7 @@ def main() -> int:
     if "--sf1" in args:
         sf1 = args[args.index("--sf1") + 1]
 
-    from bench_scaling import host_fingerprint  # noqa: E402 — tools sibling
-
-    out: dict = {"sf10_dir": sf10, "sf1_dir": sf1, "host": host_fingerprint()}
+    out: dict = {"sf10_dir": sf10, "sf1_dir": sf1, "host": obs.run_environment()}
     for tier, d in (("sf1_ab", sf1), ("sf10_ab", sf10)):
         runs = [_run(v, d) for v in ("flat", "segmented")]
         for r in runs:
@@ -282,5 +194,4 @@ def main() -> int:
 
 
 if __name__ == "__main__":
-    sys.path.insert(0, os.path.join(REPO, "tools"))
     raise SystemExit(main())

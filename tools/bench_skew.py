@@ -4,8 +4,9 @@ never been measured under the distribution that actually kills 100 TB
 joins — a hot key. This harness derives a Zipf-hot-key variant of the
 sf10 fixture (ONE customer owns 20% of 1.5 M orders,
 tools/gen_scale_fixture.py --skew), runs the same logical join three
-ways, and records wall time plus PER-TASK run-time distribution (p50 /
-p99 / max from the REST taskSummary API) for the heaviest stage:
+ways, and records wall time plus the PER-TASK run-time distribution (p50 /
+p99 / max, `obs.stage_telemetry`) of the heaviest stage (most executor
+run time):
 
 - `unsalted_aqe_off` — the failure shape: single reducer owns the hot key.
 - `unsalted_aqe_on`  — AQE skew-join split, thresholds lowered so the
@@ -38,12 +39,12 @@ import json
 import os
 import subprocess
 import sys
-import time
-import urllib.request
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+
+from t20_database_etl_pipeline_assignment_spark import obs  # noqa: E402
 
 SRC_DEFAULT = os.path.join(REPO, ".scale_fixtures", "sf10")
 DST_DEFAULT = os.path.join(REPO, ".scale_fixtures", "sf10_skew")
@@ -121,62 +122,9 @@ _FORCED = {
 }
 
 
-def _stage_ids(spark) -> set[int]:
-    base = spark.sparkContext.uiWebUrl
-    app = spark.sparkContext.applicationId
-    url = f"{base}/api/v1/applications/{app}/stages?status=complete"
-    with urllib.request.urlopen(url, timeout=10) as r:
-        return {(s["stageId"], s["attemptId"]) for s in json.load(r)}
-
-
-def _task_summary(spark, stage_id: int, attempt: int) -> dict | None:
-    base = spark.sparkContext.uiWebUrl
-    app = spark.sparkContext.applicationId
-    url = (
-        f"{base}/api/v1/applications/{app}/stages/{stage_id}/{attempt}"
-        f"/taskSummary?quantiles=0.5,0.99,1.0"
-    )
-    try:
-        with urllib.request.urlopen(url, timeout=10) as r:
-            return json.load(r)
-    except Exception:  # noqa: BLE001 — tiny stages may purge from the store
-        return None
-
-
-def _worst_stage_tasks(spark, before: set[int]) -> dict:
-    """p50/p99/max executorRunTime (sec) of the heaviest NEW stage."""
-    worst: dict = {}
-    for _ in range(10):
-        new = _stage_ids(spark) - before
-        if new:
-            break
-        time.sleep(0.2)
-    for sid, att in sorted(new):
-        ts = _task_summary(spark, sid, att)
-        if not ts or "executorRunTime" not in ts:
-            continue
-        p50, p99, mx = (v / 1000 for v in ts["executorRunTime"])
-        if not worst or mx > worst["task_max_sec"]:
-            worst = {
-                "stage_id": sid,
-                "task_p50_sec": round(p50, 3),
-                "task_p99_sec": round(p99, 3),
-                "task_max_sec": round(mx, 3),
-            }
-    return worst
-
-
 def run(passes: int, src: str, dst: str, hot_every: int, spot: bool) -> dict:
-    os.environ["T20_UI_ENABLED"] = "true"
-    from t20_database_etl_pipeline_assignment_spark.session import get_spark
-    from t20_database_etl_pipeline_assignment_spark.sources.staging import (
-        prune_stale_generations,
-    )
-
     _ensure_skew_fixture(src, dst, hot_every)
-    prune_stale_generations(dst)
-    spark = get_spark("t20-bench-skew")
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = obs.session("t20-bench-skew", dst, ui=True)
 
     restore = {k: spark.conf.get(k, None) for k in _FORCED}
     results: dict[str, dict] = {}
@@ -185,17 +133,11 @@ def run(passes: int, src: str, dst: str, hot_every: int, spot: bool) -> dict:
             spark.conf.set(k, v)
         for name, (builder, aqe_skew) in VARIANTS.items():
             spark.conf.set("spark.sql.adaptive.skewJoin.enabled", str(aqe_skew).lower())
-            builder(spark, dst).write.format("noop").mode("overwrite").save()  # warm
-            walls = []
-            tasks: dict = {}
-            for p in range(passes):
-                before = _stage_ids(spark)
-                t0 = time.perf_counter()
-                builder(spark, dst).write.format("noop").mode("overwrite").save()
-                walls.append(round(time.perf_counter() - t0, 3))
-                if p == passes - 1:
-                    tasks = _worst_stage_tasks(spark, before)
-            results[name] = {"wall_sec": min(walls), **tasks}
+            reps = obs.measure(lambda: builder(spark, dst), passes, spark=spark)
+            results[name] = {
+                "wall_sec": round(min(r.total_s for r in reps), 3),
+                **reps[-1].stages.get("heaviest_stage", {}),
+            }
     finally:
         for k, v in restore.items():
             if v is None:
@@ -221,6 +163,10 @@ def run(passes: int, src: str, dst: str, hot_every: int, spot: bool) -> dict:
         flags.append("no task telemetry for the unsalted baseline")
 
     skew = {
+        # the run environment, as the sf1/sf10 tiers record it: all three
+        # tiers in one artifact must name the host shape that produced them
+        # or cross-round ratio drift is unattributable
+        "host": obs.run_environment(spark),
         "fixture": os.path.relpath(dst, REPO),
         "hot_share": round(1 / hot_every, 3),
         "forced_confs": _FORCED,
@@ -257,11 +203,6 @@ def main() -> None:
     args = ap.parse_args()
 
     skew = run(args.passes, args.src, args.dst, args.hot_every, args.spot)
-    # same host stamp as the sf1/sf10 tiers (bench_scaling.host_fingerprint):
-    # all three tiers in one artifact must name the host shape that produced
-    # them or cross-round ratio drift is unattributable
-    from bench_scaling import host_fingerprint
-    skew["host"] = host_fingerprint()
 
     path = os.path.join(REPO, "BENCH_SCALING.json")
     with open(path) as f:

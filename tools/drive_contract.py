@@ -78,14 +78,21 @@ def oracle_con(sf: str) -> duckdb.DuckDBPyConnection:
 
 _CORE_FP_CACHE: dict[str, str] = {}
 
+# package modules no query can run: the measurement layer and the ETL
+# runner. No operators/, streaming/ or core module imports them
+# (tests/test_scale_tools.py checks the whole import closure), so their
+# edits cannot change what a contract record proved.
+NON_QUERY_MODULES = ("obs.py", "pipeline.py")
+
 
 def _package_core_hash() -> str:
     """md5 of every package module OUTSIDE the operators/ and streaming/
-    trees (exprs, registry, sources, functions, plans, pipeline, session,
-    __init__s) plus __spark_entry__.py. operators/ and streaming/ modules
-    are covered per-defining-module (plus their one-level package-internal
-    imports) in query_fingerprint, so edits there invalidate only the
-    affected modules' queries instead of every carry."""
+    trees (exprs, registry, sources, functions, plans, session, __init__s;
+    not NON_QUERY_MODULES) plus __spark_entry__.py. operators/ and
+    streaming/ modules are covered per-defining-module (plus their
+    one-level package-internal imports) in query_fingerprint, so edits
+    there invalidate only the affected modules' queries instead of every
+    carry."""
     import hashlib
 
     if "core" in _CORE_FP_CACHE:
@@ -95,7 +102,8 @@ def _package_core_hash() -> str:
     files = [os.path.join(repo, "__spark_entry__.py")]
     for root, dirs, names in os.walk(pkg):
         dirs[:] = [x for x in dirs if x not in ("operators", "streaming", "__pycache__")]
-        files += [os.path.join(root, n) for n in sorted(names) if n.endswith(".py")]
+        files += [os.path.join(root, n) for n in sorted(names) if n.endswith(".py")
+                  and not (root == pkg and n in NON_QUERY_MODULES)]
     h = hashlib.md5()
     for p in sorted(files):
         with open(p, "rb") as f:
@@ -122,16 +130,37 @@ def _module_hash(mod_file: str) -> str:
     too. One level suffices for the package's import graph; deeper
     shared code lives in the core modules hashed by _package_core_hash."""
     import hashlib
-    import re
 
     with open(mod_file, "rb") as f:
-        src = f.read()
-    text = src.decode("utf-8", "replace")
-    deps: set[str] = set()
+        h = hashlib.md5(f.read())
+    pkg_dir = _pkg_dir(mod_file)
+    # repo-relative paths, relative-path sort order: portable across
+    # checkout locations (judge r9 advice), same rationale as
+    # _package_core_hash
+    rel = {os.path.relpath(p, pkg_dir): p for p in module_deps(mod_file)
+           if os.path.abspath(p) != os.path.abspath(mod_file)}
+    for rp in sorted(rel):
+        with open(rel[rp], "rb") as f:
+            h.update(b"\x00" + rp.encode() + b"\x00" + f.read())
+    return h.hexdigest()
+
+
+def _pkg_dir(mod_file: str) -> str:
     pkg_root = mod_file
     while os.path.basename(os.path.dirname(pkg_root)) != _PKG and _PKG in pkg_root:
         pkg_root = os.path.dirname(pkg_root)
-    pkg_dir = os.path.dirname(pkg_root)  # .../t20_..._spark
+    return os.path.dirname(pkg_root)  # .../t20_..._spark
+
+
+def module_deps(mod_file: str) -> set[str]:
+    """Files of the package-internal modules `mod_file` imports (static
+    `from ... import` lines, relative or absolute)."""
+    import re
+
+    with open(mod_file, "rb") as f:
+        text = f.read().decode("utf-8", "replace")
+    pkg_dir = _pkg_dir(mod_file)
+    deps: set[str] = set()
 
     def add_candidate(base_dir: str, dotted: str, names: list[str]) -> None:
         parts = [p for p in dotted.split(".") if p]
@@ -160,17 +189,7 @@ def _module_hash(mod_file: str) -> str:
         rf"^\s*from ({_PKG})([\w.]*) import ([\w, ()*]+)", text, re.M
     ):
         add_candidate(pkg_dir, m.group(2), [n.strip() for n in m.group(3).split(",")])
-
-    h = hashlib.md5(src)
-    # repo-relative paths, relative-path sort order: portable across
-    # checkout locations (judge r9 advice), same rationale as
-    # _package_core_hash
-    rel = {os.path.relpath(p, pkg_dir): p for p in deps
-           if os.path.abspath(p) != os.path.abspath(mod_file)}
-    for rp in sorted(rel):
-        with open(rel[rp], "rb") as f:
-            h.update(b"\x00" + rp.encode() + b"\x00" + f.read())
-    return h.hexdigest()
+    return deps
 
 
 def query_fingerprint(qid: str, fn, oracle: str) -> str:
