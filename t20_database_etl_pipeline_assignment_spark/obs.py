@@ -8,6 +8,10 @@ telemetry, and the environment a run measured on.
   job group, so a measured call sees only its own jobs. It needs the UI on
   (`session(..., ui=True)`) and returns {} without it: telemetry degrades,
   timing never does. `summarize_stages` is the pure aggregation under it.
+  Two stages are singled out: the heaviest (most executor run time, with
+  its effective parallelism) and, when task quantiles are asked for, the
+  one holding the longest task (a skewed reducer), with its task
+  p50/p99/max.
 - `run_environment` names what a run measured on.
 """
 
@@ -77,10 +81,11 @@ class Rep:
         return self.build_s + self.exec_s
 
 
-def timed(build, action=noop, spark=None) -> Rep:
+def timed(build, action=noop, spark=None, task_quantiles: bool = False) -> Rep:
     """Time `build()` and then `action` on its DataFrame, nothing between
     them. With `spark`, the call runs in its own job group and `stages`
-    holds the telemetry of exactly its stages."""
+    holds the telemetry of exactly its stages (see `stage_telemetry` for
+    `task_quantiles`)."""
     sc = spark.sparkContext if spark is not None else None
     if sc is not None:
         group = f"obs-{uuid.uuid4().hex}"
@@ -96,15 +101,16 @@ def timed(build, action=noop, spark=None) -> Rep:
             sc._jsc.clearJobGroup()
     rep = Rep(t1 - t0, t2 - t1, result)
     if sc is not None:
-        rep.stages = stage_telemetry(sc, group)
+        rep.stages = stage_telemetry(sc, group, task_quantiles)
     return rep
 
 
-def measure(build, reps: int, spark=None) -> list[Rep]:
+def measure(build, reps: int, spark=None, task_quantiles: bool = False) -> list[Rep]:
     """One untimed warm rep (staged artifacts, JIT), then `reps` timed ones;
     with `spark`, the last rep carries its stage telemetry."""
     noop(build())
-    return [timed(build) for _ in range(reps - 1)] + [timed(build, spark=spark)]
+    return [timed(build) for _ in range(reps - 1)] + [
+        timed(build, spark=spark, task_quantiles=task_quantiles)]
 
 
 def summary(xs) -> dict:
@@ -122,10 +128,23 @@ def median_split(reps: list[Rep]) -> tuple[float, float]:
             round(statistics.fmean(r.exec_s for r in mid), 3))
 
 
+def _mem_total_gb() -> float:
+    try:
+        with open("/proc/meminfo") as f:
+            for line in f:
+                if line.startswith("MemTotal:"):
+                    return round(int(line.split()[1]) / 1e6, 1)
+    except OSError:
+        pass
+    return 0.0
+
+
 def run_environment(spark=None) -> dict:
-    """Host shape, plus master, parallelism and shuffle partitions when a
+    """Host shape (so a ratio drift across runs can be traced to a host
+    change), plus master, parallelism and shuffle partitions when a
     session is given."""
-    env = {"host": socket.gethostname(), "nproc": len(os.sched_getaffinity(0))}
+    env = {"host": socket.gethostname(), "nproc": len(os.sched_getaffinity(0)),
+           "mem_total_gb": _mem_total_gb()}
     if spark is not None:
         sc = spark.sparkContext
         env |= {
@@ -152,10 +171,12 @@ def _group_stage_ids(sc, group: str) -> set[int] | None:
     return {s for j in jobs for s in j.stageIds}
 
 
-def stage_telemetry(sc, group: str) -> dict:
-    """`summarize_stages` over the completed stages of job group `group`,
-    with the task-time quantiles of its heaviest stage; {} when the UI is
-    off, the REST fetch fails or the group's jobs never show finished."""
+def stage_telemetry(sc, group: str, task_quantiles: bool = False) -> dict:
+    """`summarize_stages` over the completed stages of job group `group`;
+    {} when the UI is off, the stage list fetch fails or the group's jobs
+    never show finished. `task_quantiles` also fetches every stage's
+    taskSummary; a stage whose summary fetch fails (purged from the store)
+    only drops out of the worst-task pick."""
     try:
         for _ in range(_SETTLE_TRIES):
             ids = _group_stage_ids(sc, group)
@@ -165,19 +186,26 @@ def stage_telemetry(sc, group: str) -> dict:
         else:
             return {}
         stages = [s for s in _rest(sc, "stages?status=complete") if s["stageId"] in ids]
-        h = heaviest_stage(stages)
-        tasks = None
-        if h is not None:
-            tasks = _rest(sc, f"stages/{h['stageId']}/{h.get('attemptId', 0)}"
-                              "/taskSummary?quantiles=0.5,0.99,1.0")
-        return summarize_stages(stages, tasks)
     except (OSError, ValueError, KeyError):  # UI off, fetch failed, odd payload
         return {}
+    tasks = {}
+    for s in stages if task_quantiles else []:
+        try:
+            tasks[s["stageId"]] = _rest(sc, f"stages/{s['stageId']}/{s.get('attemptId', 0)}"
+                                            "/taskSummary?quantiles=0.5,0.99,1.0")
+        except (OSError, ValueError):
+            pass
+    return summarize_stages(stages, tasks)
 
 
 def heaviest_stage(stages: list[dict]) -> dict | None:
     """The stage that did the most executor work."""
     return max(stages, key=lambda s: s.get("executorRunTime", 0), default=None)
+
+
+def _task_quantiles(summary: dict) -> list | None:
+    q = summary.get("executorRunTime")
+    return q if q and len(q) == 3 else None
 
 
 def _ms(ts: str) -> float:
@@ -191,9 +219,10 @@ def _mb(x: float) -> float:
 def summarize_stages(stages: list[dict], tasks: dict | None = None) -> dict:
     """Aggregate REST StageData records: summed shuffle and spill, peak
     per-stage execution memory, the stages over the `_HEAVY` marks, and
-    the heaviest stage's shape. Its effective parallelism is executor run
-    time over stage wall; `tasks` (its taskSummary at quantiles
-    0.5/0.99/1.0) adds the task p50/p99/max."""
+    the heaviest stage's shape (effective parallelism = executor run time
+    over stage wall). `tasks` maps stage id to its taskSummary at
+    quantiles 0.5/0.99/1.0; with it, `worst_task_stage` is the stage whose
+    longest task is the longest, with its task p50/p99/max."""
     out = {key: _mb(sum(s.get(f, 0) for s in stages)) for f, key in _SUMS.items()}
     out["peak_stage_execution_memory_mb"] = _mb(
         max((s.get("peakExecutionMemory", 0) for s in stages), default=0))
@@ -222,9 +251,11 @@ def summarize_stages(stages: list[dict], tasks: dict | None = None) -> dict:
         "stage_wall_ms": round(wall_ms),
         "effective_parallelism": round(run_ms / wall_ms, 1) if wall_ms > 0 else None,
     }
-    q = (tasks or {}).get("executorRunTime")
-    if q and len(q) == 3:
-        out["heaviest_stage"] |= {
-            k: round(v / 1000, 3) for k, v in zip(("task_p50_sec", "task_p99_sec", "task_max_sec"), q)
+    quantiles = {sid: q for sid, t in (tasks or {}).items() if (q := _task_quantiles(t))}
+    if quantiles:
+        sid = max(quantiles, key=lambda i: quantiles[i][2])
+        out["worst_task_stage"] = {"stage_id": sid} | {
+            k: round(v / 1000, 3)
+            for k, v in zip(("task_p50_sec", "task_p99_sec", "task_max_sec"), quantiles[sid])
         }
     return out

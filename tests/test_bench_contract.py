@@ -46,7 +46,8 @@ def test_bench_emits_contract_json(tmp_path):
     assert detail["value"] == payload["value"]
     assert payload["common_subset_n"] == 0
     # what the run measured on, in both records
-    env_keys = {"master", "default_parallelism", "shuffle_partitions", "host", "nproc"}
+    env_keys = {"master", "default_parallelism", "shuffle_partitions", "host", "nproc",
+                "mem_total_gb"}
     assert set(payload["env"]) == env_keys
     assert detail["env"] == payload["env"]
     assert payload["env"]["default_parallelism"] >= 1

@@ -29,7 +29,7 @@ def test_summarize_several_stages():
                memoryBytesSpilled=8_000_000, peakExecutionMemory=9_000_000),
         _stage(5, 10),
     ]
-    tasks = {"executorRunTime": [1200.0, 2900.0, 3000.0]}
+    tasks = {4: {"executorRunTime": [1200.0, 2900.0, 3000.0]}}
     out = obs.summarize_stages(stages, tasks)
     assert out["n_stages"] == 3
     assert out["shuffle_write_mb"] == 60.0
@@ -43,7 +43,22 @@ def test_summarize_several_stages():
     assert h["stage_id"] == 4  # most executor run time
     assert h["stage_wall_ms"] == 2000
     assert h["effective_parallelism"] == 3.0
-    assert (h["task_p50_sec"], h["task_p99_sec"], h["task_max_sec"]) == (1.2, 2.9, 3.0)
+    assert out["worst_task_stage"] == {
+        "stage_id": 4, "task_p50_sec": 1.2, "task_p99_sec": 2.9, "task_max_sec": 3.0}
+
+
+def test_worst_task_stage_is_not_the_heaviest_stage():
+    """A wide scan stage of many ~1.5 s tasks out-runs, in total executor
+    time, a reducer stage with one 7 s hot-key task; the worst-task pick
+    must still report the reducer."""
+    scan = _stage(1, 64 * 1500, numTasks=64)
+    reducer = _stage(2, 31 * 100 + 7000, numTasks=32)
+    tasks = {1: {"executorRunTime": [1500.0, 1600.0, 1650.0]},
+             2: {"executorRunTime": [100.0, 300.0, 7000.0]}}
+    out = obs.summarize_stages([scan, reducer], tasks)
+    assert out["heaviest_stage"]["stage_id"] == 1
+    w = out["worst_task_stage"]
+    assert (w["stage_id"], w["task_p50_sec"], w["task_max_sec"]) == (2, 0.1, 7.0)
 
 
 def test_summarize_empty_list():
@@ -52,50 +67,74 @@ def test_summarize_empty_list():
     assert out["shuffle_write_mb"] == out["peak_stage_execution_memory_mb"] == 0
     assert out["heavy_stages"] == []
     assert "heaviest_stage" not in out
+    assert "worst_task_stage" not in out
 
 
 def test_summarize_missing_fields():
     """Records without metrics or timestamps (e.g. a stage the store kept
     only partially) count as zero and give no parallelism, not a crash."""
-    out = obs.summarize_stages([{"stageId": 7}, {}], {"executorRunTime": []})
+    out = obs.summarize_stages([{"stageId": 7}, {}], {7: {"executorRunTime": []}, 8: {}})
     assert out["n_stages"] == 2
     assert out["shuffle_read_mb"] == 0
     h = out["heaviest_stage"]
     assert h["executor_run_ms"] == 0
     assert h["stage_wall_ms"] == 0
     assert h["effective_parallelism"] is None
-    assert "task_max_sec" not in h
+    assert "worst_task_stage" not in out
 
 
 def test_summarize_one_task_stage():
     one = _stage(0, 500, numTasks=1, completionTime="2026-01-01T00:00:00.500GMT")
-    h = obs.summarize_stages([one], {"executorRunTime": [500.0, 500.0, 500.0]})[
-        "heaviest_stage"
-    ]
+    out = obs.summarize_stages([one], {0: {"executorRunTime": [500.0, 500.0, 500.0]}})
+    h, w = out["heaviest_stage"], out["worst_task_stage"]
     assert h["num_tasks"] == 1
     assert h["effective_parallelism"] == 1.0
-    assert h["task_p50_sec"] == h["task_p99_sec"] == h["task_max_sec"] == 0.5
+    assert w["task_p50_sec"] == w["task_p99_sec"] == w["task_max_sec"] == 0.5
+
+
+class _Tracker:
+    def getJobIdsForGroup(self, group):
+        return [0]
+
+    def getJobInfo(self, job):
+        from pyspark.status import SparkJobInfo
+
+        return SparkJobInfo(job, [0, 1], "SUCCEEDED")
+
+
+class _Sc:
+    uiWebUrl = None
+    applicationId = "app"
+
+    def statusTracker(self):
+        return _Tracker()
 
 
 def test_stage_telemetry_without_ui_is_empty():
     """No UI means no REST API: telemetry is {} and never raises."""
-    from pyspark.status import SparkJobInfo
+    assert obs.stage_telemetry(_Sc(), "g") == {}
+    assert obs.stage_telemetry(_Sc(), "g", task_quantiles=True) == {}
 
-    class Tracker:
-        def getJobIdsForGroup(self, group):
-            return [0]
 
-        def getJobInfo(self, job):
-            return SparkJobInfo(job, [0, 1], "SUCCEEDED")
+def test_stage_telemetry_keeps_sums_when_a_task_summary_fetch_fails(monkeypatch):
+    """A stage purged from the store answers its taskSummary with 404: it
+    drops out of the worst-task pick, and the stage sums stay."""
+    import urllib.error
 
-    class NoUi:
-        uiWebUrl = None
-        applicationId = "app"
+    def rest(sc, path):
+        if path.startswith("stages?"):
+            return [_stage(0, 900, shuffleWriteBytes=2_000_000), _stage(1, 50), _stage(9, 5)]
+        if path.startswith("stages/0/"):
+            raise urllib.error.HTTPError(path, 404, "purged", None, None)
+        return {"executorRunTime": [10.0, 40.0, 50.0]}
 
-        def statusTracker(self):
-            return Tracker()
-
-    assert obs.stage_telemetry(NoUi(), "g") == {}
+    monkeypatch.setattr(obs, "_rest", rest)
+    out = obs.stage_telemetry(_Sc(), "g", task_quantiles=True)
+    assert out["n_stages"] == 2  # stage 9 is not in the group
+    assert out["shuffle_write_mb"] == 2.0
+    assert out["heaviest_stage"]["stage_id"] == 0
+    assert out["worst_task_stage"]["stage_id"] == 1
+    assert "worst_task_stage" not in obs.stage_telemetry(_Sc(), "g")
 
 
 def test_timed_measure_and_summaries():
@@ -138,5 +177,6 @@ def test_timed_measure_and_summaries():
 
 def test_run_environment_without_session():
     env = obs.run_environment()
-    assert set(env) == {"host", "nproc"}
+    assert set(env) == {"host", "nproc", "mem_total_gb"}
     assert env["nproc"] >= 1
+    assert env["mem_total_gb"] > 0

@@ -236,24 +236,59 @@ def test_fingerprints_are_checkout_portable(tmp_path):
 def test_non_query_modules_stay_out_of_query_import_closure():
     """The contract fingerprint leaves drive_contract.NON_QUERY_MODULES out
     of its package-core hash. That is sound only while no query can run
-    their code: the static import closure of every query-defining module
-    must not reach them."""
+    their code. The import closure walked from the package __init__ (every
+    query module's import runs it), __spark_entry__.py, registry.py and
+    every query-defining module (`from`/`import`/`import_module` forms)
+    may reach them only through the package __init__'s eager submodule
+    import, which binds a name; no closure module may touch that name as
+    an attribute (`t20.pipeline.x`); and their own top level may run only
+    imports, definitions, constants and logger lookups, so loading them
+    cannot change a query."""
+    import ast
     import inspect
 
     import __spark_entry__ as ep
     import drive_contract as dc
 
     pkg = os.path.join(REPO, "t20_database_etl_pipeline_assignment_spark")
+    init = os.path.join(pkg, "__init__.py")
     excluded = {os.path.join(pkg, n) for n in dc.NON_QUERY_MODULES}
-    todo = {inspect.getsourcefile(sys.modules[fn.__module__])
-            for fn in ep.queries().values()}
-    seen: set[str] = set()
+    stems = {os.path.splitext(n)[0] for n in dc.NON_QUERY_MODULES}
+    roots = {init, os.path.join(REPO, "__spark_entry__.py"), os.path.join(pkg, "registry.py")}
+    roots |= {inspect.getsourcefile(sys.modules[fn.__module__])
+              for fn in ep.queries().values()}
+    todo, seen, edges_in = set(roots), set(), set()
     while todo:
         f = todo.pop()
         seen.add(f)
-        todo |= dc.module_deps(f) - seen
+        deps = dc.module_deps(f)
+        if deps & excluded:
+            edges_in.add(f)
+        todo |= deps - excluded - seen
     assert len(seen) > 20
-    assert not seen & excluded, sorted(seen & excluded)
+    assert edges_in <= {init}, sorted(edges_in)
+
+    for f in sorted(seen):
+        with open(f) as fh:
+            tree = ast.parse(fh.read())
+        used = [n.lineno for n in ast.walk(tree)
+                if isinstance(n, ast.Attribute) and n.attr in stems]
+        assert not used, f"{f} reaches a non-query module at lines {used}"
+
+    def allowed_call(node):
+        return ast.unparse(node.func) == "logging.getLogger"
+
+    for f in sorted(excluded):
+        with open(f) as fh:
+            body = ast.parse(fh.read()).body
+        for node in body:
+            if isinstance(node, (ast.Import, ast.ImportFrom, ast.FunctionDef, ast.ClassDef)):
+                continue
+            if isinstance(node, ast.Expr) and isinstance(node.value, ast.Constant):
+                continue  # docstring
+            assert isinstance(node, (ast.Assign, ast.AnnAssign)), (f, node.lineno)
+            calls = [c for c in ast.walk(node) if isinstance(c, ast.Call)]
+            assert all(allowed_call(c) for c in calls), (f, node.lineno)
 
 
 def test_tools_import_without_starting_spark():

@@ -16,9 +16,10 @@ explain.
 The sf10 tier additionally records per-query stage telemetry
 (`obs.stage_telemetry`, spark.ui.enabled flipped on via T20_UI_ENABLED):
 shuffle read/write, memory/disk spill, peak per-stage execution memory and
-the heaviest stage's task p50/p99/max - wall-clock alone can hide a memory
-cliff that kills at cluster scale; spill == 0 with bounded peak memory is
-the evidence that the plans hold when partitions carry 1000x the rows.
+the heaviest stage's effective parallelism - wall-clock alone can hide a
+memory cliff that kills at cluster scale; spill == 0 with bounded peak
+memory is the evidence that the plans hold when partitions carry 1000x the
+rows.
 
 With --spot, also runs the DuckDB oracle gate (tools/drive_contract.py,
 vanilla session subprocess) for the tier's spot queries at the big SF,

@@ -5,8 +5,8 @@ joins — a hot key. This harness derives a Zipf-hot-key variant of the
 sf10 fixture (ONE customer owns 20% of 1.5 M orders,
 tools/gen_scale_fixture.py --skew), runs the same logical join three
 ways, and records wall time plus the PER-TASK run-time distribution (p50 /
-p99 / max, `obs.stage_telemetry`) of the heaviest stage (most executor
-run time):
+p99 / max, `obs.stage_telemetry`) of the stage holding the longest task
+(the hot-key reducer when the plan does not spread it):
 
 - `unsalted_aqe_off` — the failure shape: single reducer owns the hot key.
 - `unsalted_aqe_on`  — AQE skew-join split, thresholds lowered so the
@@ -133,10 +133,11 @@ def run(passes: int, src: str, dst: str, hot_every: int, spot: bool) -> dict:
             spark.conf.set(k, v)
         for name, (builder, aqe_skew) in VARIANTS.items():
             spark.conf.set("spark.sql.adaptive.skewJoin.enabled", str(aqe_skew).lower())
-            reps = obs.measure(lambda: builder(spark, dst), passes, spark=spark)
+            reps = obs.measure(lambda: builder(spark, dst), passes, spark=spark,
+                               task_quantiles=True)
             results[name] = {
                 "wall_sec": round(min(r.total_s for r in reps), 3),
-                **reps[-1].stages.get("heaviest_stage", {}),
+                **reps[-1].stages.get("worst_task_stage", {}),
             }
     finally:
         for k, v in restore.items():

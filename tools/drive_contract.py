@@ -146,6 +146,8 @@ def _module_hash(mod_file: str) -> str:
 
 
 def _pkg_dir(mod_file: str) -> str:
+    if _PKG not in mod_file:  # a repo-root file such as __spark_entry__.py
+        return os.path.join(os.path.dirname(mod_file), _PKG)
     pkg_root = mod_file
     while os.path.basename(os.path.dirname(pkg_root)) != _PKG and _PKG in pkg_root:
         pkg_root = os.path.dirname(pkg_root)
@@ -153,8 +155,9 @@ def _pkg_dir(mod_file: str) -> str:
 
 
 def module_deps(mod_file: str) -> set[str]:
-    """Files of the package-internal modules `mod_file` imports (static
-    `from ... import` lines, relative or absolute)."""
+    """Files of the package-internal modules `mod_file` imports: static
+    `from ... import` lines (relative or absolute), `import <pkg>[.mod]`
+    lines and `importlib.import_module("<pkg>[.mod]")` calls."""
     import re
 
     with open(mod_file, "rb") as f:
@@ -189,6 +192,11 @@ def module_deps(mod_file: str) -> set[str]:
         rf"^\s*from ({_PKG})([\w.]*) import ([\w, ()*]+)", text, re.M
     ):
         add_candidate(pkg_dir, m.group(2), [n.strip() for n in m.group(3).split(",")])
+    for m in re.finditer(
+        rf"^\s*import ({_PKG})([\w.]*)|import_module\(\s*[\"']({_PKG})([\w.]*)[\"']",
+        text, re.M,
+    ):
+        add_candidate(pkg_dir, m.group(2) or m.group(4) or "", [])
     return deps
 
 
