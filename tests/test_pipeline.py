@@ -288,3 +288,145 @@ def test_events_swap_crash_keeps_loaded_history(spark, sf_dir, target_dir, tmp_p
     assert loaded <= after, f"{len(loaded - after)} loaded events lost"
     assert m2["events_rows"] == len(after)
     assert not os.path.exists(ev_path + ".old")
+
+
+def _night_inputs(sf_dir, night_dir):
+    """A nightly increment of the fixtures in `night_dir`: three customers
+    change balance, 25 lineitem rows break DQ rules (five with two reasons
+    at once), and 50 new events arrive above the loaded watermark. Every
+    other table is a symlink to the fixture."""
+    import datetime as dt
+    import glob
+    import os
+
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    night_dir.mkdir()
+    for p in glob.glob(f"{sf_dir}/*.parquet"):
+        name = os.path.basename(p)
+        if name not in ("customer.parquet", "lineitem.parquet", "events.parquet"):
+            os.symlink(p, night_dir / name)
+
+    cust = pq.read_table(f"{sf_dir}/customer.parquet")
+    bal = cust["c_acctbal"].to_numpy().copy()
+    bal[:3] += 1000.0
+    pq.write_table(cust.set_column(cust.schema.get_field_index("c_acctbal"),
+                                   "c_acctbal", pa.array(bal)),
+                   night_dir / "customer.parquet")
+
+    li = pq.read_table(f"{sf_dir}/lineitem.parquet")
+    qty = li["l_quantity"].to_numpy().copy()
+    disc = li["l_discount"].to_numpy().copy()
+    qty[:10] = 0.0          # quantity_range
+    disc[5:15] = 0.5        # discount_max (rows 5-9 break both rules)
+    key = li["l_orderkey"].to_pylist()
+    key[20:25] = [None] * 5  # nonnull_key
+    for col, arr in (("l_quantity", pa.array(qty)), ("l_discount", pa.array(disc)),
+                     ("l_orderkey", pa.array(key, pa.int64()))):
+        li = li.set_column(li.schema.get_field_index(col), col, arr)
+    pq.write_table(li, night_dir / "lineitem.parquet")
+
+    ev = pq.read_table(f"{sf_dir}/events.parquet")
+    new = ev.slice(0, 50)
+    id0 = pc.max(ev["event_id"]).as_py() + 1
+    ts0 = pc.max(ev["ts"]).as_py()
+    new = new.set_column(0, "event_id", pa.array(range(id0, id0 + 50), pa.int64()))
+    new = new.set_column(1, "ts", pa.array(
+        [ts0 + dt.timedelta(hours=1 + i) for i in range(50)], pa.timestamp("us")))
+    pq.write_table(pa.concat_tables([ev, new]), night_dir / "events.parquet")
+
+
+def test_observed_counts_equal_on_disk_counts(spark, sf_dir, target_dir, tmp_path):
+    """The audit counts ride on the writes as Observations: each must equal
+    a fresh count of what the write left on disk, and the DQ split must
+    equal the quarantine's own reasons — on the first run and on an
+    increment with changed customers, DQ breaks and new events. The jobs
+    the flow threads start keep the caller's job group."""
+    from t20_database_etl_pipeline_assignment_spark.operators.etl import dq_quarantine
+    from t20_database_etl_pipeline_assignment_spark.pipeline import lineitem_rules
+
+    night = tmp_path / "night1"
+    _night_inputs(sf_dir, night)
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    audits = []
+    for src, batch_ts in ((sf_dir, "2026-01-01 00:00:00"),
+                          (str(night), "2026-01-02 00:00:00")):
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        ungrouped = set(tracker.getJobIdsForGroup(None))
+        sc.setJobGroup("etl_counts", "etl_counts")
+        try:
+            m = run_etl(spark, src, target_dir, batch_ts=batch_ts)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        assert set(tracker.getJobIdsForGroup(None)) == ungrouped
+        assert m["fact_rows"] == spark.read.parquet(f"{target_dir}/fact_lineitem").count()
+        assert m["events_rows"] == spark.read.parquet(f"{target_dir}/events").count()
+        assert m["dim_customer_rows"] == spark.read.parquet(
+            f"{target_dir}/dim_customer").count()
+
+        lineitem = spark.read.parquet(f"{src}/lineitem.parquet")
+        _, quarantined = dq_quarantine(lineitem, lineitem_rules())
+        want = {
+            r["rule"]: r["count"]
+            for r in quarantined.select(F.explode("_dq_reasons").alias("rule"))
+            .groupBy("rule").count().collect()
+        }
+        assert m["rejects_by_rule"] == want
+        assert m["rows_valid"] + quarantined.count() == lineitem.count()
+        assert m["rows_valid"] == m["fact_rows"]
+        audits.append(m)
+
+    first, m = audits
+    assert m["rejects_by_rule"] == {"quantity_range": 10, "discount_max": 10,
+                                    "nonnull_key": 5}
+    assert m["events_rows"] == first["events_rows"] + 50
+    assert m["dim_customer_rows"] == first["dim_customer_rows"] + 3
+    assert m["dim_bands_rewritten"] > 0
+    assert tracker.getJobIdsForGroup("etl_counts")
+
+
+def _table_rows(spark, path):
+    return sorted(tuple(r) for r in spark.read.parquet(path).collect())
+
+
+def test_failing_flow_leaves_other_flows_complete(spark, sf_dir, target_dir, tmp_path,
+                                                  caplog):
+    """One flow fails (the events target path is a plain file): run_etl
+    raises that flow's error after the other two flows finish, logs the
+    stage as FAILED, and leaves no temp dir. With the fault removed, a
+    rerun of the same batch matches a clean run."""
+    import glob
+    import logging
+    import os
+
+    ev_path = f"{target_dir}/events"
+    with open(ev_path, "w") as f:
+        f.write("not a parquet directory\n")
+    with caplog.at_level(logging.INFO, logger="t20spark.pipeline"):
+        with pytest.raises(Exception, match="events") as err:
+            run_etl(spark, sf_dir, target_dir, batch_ts="2026-01-01 00:00:00")
+    assert "stage load_events_incremental: FAILED" in caplog.text
+    failed = [r for r in caplog.records if "FAILED" in r.getMessage()]
+    assert len(failed) == 1 and failed[0].exc_info[1] is err.value
+
+    n_li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").count()
+    n_cust = spark.read.parquet(f"{sf_dir}/customer.parquet").count()
+    assert spark.read.parquet(f"{target_dir}/fact_lineitem").count() == n_li
+    assert spark.read.parquet(f"{target_dir}/dim_customer").count() == n_cust
+    assert glob.glob(f"{target_dir}/*.tmp-*") == []
+
+    os.remove(ev_path)
+    m = run_etl(spark, sf_dir, target_dir, batch_ts="2026-01-01 00:00:00")
+    clean_dir = str(tmp_path / "clean")
+    want = run_etl(spark, sf_dir, clean_dir, batch_ts="2026-01-01 00:00:00")
+    audit = ("rows_valid", "fact_rows", "rejects_by_rule", "dim_customer_rows",
+             "events_rows")
+    assert {k: m[k] for k in audit} == {k: want[k] for k in audit}
+    for t in ("fact_lineitem", "dim_customer", "events"):
+        assert _table_rows(spark, f"{target_dir}/{t}") == _table_rows(spark, f"{clean_dir}/{t}"), t
+    assert glob.glob(f"{target_dir}/*.tmp-*") == []

@@ -451,6 +451,31 @@ def test_scd2_sink_recovers_between_rename_crash(spark, tmp_path):
     assert spark.read.parquet(dim).collect()[0]["v"] == "a"
 
 
+def test_publish_writes_keep_caller_job_group(spark, tmp_path):
+    """The dimension and sidecar writes run on two threads: their jobs
+    must carry the caller's job group, or per-group job counters and
+    stage telemetry miss the publish phase."""
+    from t20_database_etl_pipeline_assignment_spark.streaming.scd2_sink import (
+        atomic_swap_publish,
+    )
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    df = spark.createDataFrame([(1, "a"), (2, "b")], "k long, v string")
+    snap = spark.createDataFrame([(1, "a")], "k long, v string")
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup("publish_group", "publish_group")
+    try:
+        atomic_swap_publish(df, str(tmp_path / "dim"), {"batch_id": 0}, snap=snap)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert set(tracker.getJobIdsForGroup(None)) == ungrouped
+    assert len(tracker.getJobIdsForGroup("publish_group")) >= 2
+
+
 def test_stateful_cusum_parity(spark, sf_dir):
     """Streaming CUSUM (applyInPandasWithState, O(1) state per event type)
     must agree with the batch window-identity formulation
@@ -584,6 +609,12 @@ def test_scd2_sink_rejects_day_regression(spark, tmp_path):
     sink(day2, 0)
     with _pytest.raises(ValueError, match="older than the folded head"):
         sink(day1_late, 1)
+    empty = spark.createDataFrame([], schema)
+    sink(empty, 2)  # no event-days: nothing to fold
+    # the fold persists each batch; every exit (applied, raised, no
+    # event-days) releases it
+    for df in (day2, day1_late, empty):
+        assert not (df.storageLevel.useMemory or df.storageLevel.useDisk)
 
 
 def test_scd2_sink_late_day_reconciliation(spark, tmp_path):
