@@ -58,6 +58,7 @@ import time
 from contextlib import contextmanager
 from functools import reduce
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
@@ -69,7 +70,7 @@ from .operators.etl import (
     scd2_init,
 )
 from .sources.tables import table
-from .streaming.scd2_sink import recover_swap, run_concurrently, swap_in
+from .streaming.scd2_sink import recover_swap, swap_in
 
 log = logging.getLogger("t20spark.pipeline")
 
@@ -98,7 +99,6 @@ def _scd2_changed_bands(target: DataFrame, staged: DataFrame, keys, attrs) -> li
 
 
 def _scd2_rewrite_bands(
-    spark: SparkSession,
     target: DataFrame,
     staged: DataFrame,
     keys,
@@ -200,6 +200,20 @@ def _overwrite_in_place(df: DataFrame, path: str) -> None:
     swap_in(tmp, path)
 
 
+def run_concurrently(spark: SparkSession, *thunks) -> list:
+    """Run each thunk on its own thread and return their results in order.
+    Every thread inherits the caller's Spark local properties (job group,
+    job description, scheduler pool), so the jobs it starts are attributed
+    like the caller's own. Waits for ALL thunks, then re-raises the first
+    failure in argument order: a failed thunk never leaves another one
+    writing behind the caller's back."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    with ThreadPoolExecutor(max_workers=len(thunks)) as ex:
+        futures = [ex.submit(inheritable_thread_target(spark)(t)) for t in thunks]
+    return [f.result() for f in futures]
+
+
 def _observe_rows(df: DataFrame) -> tuple[DataFrame, Observation]:
     """`df` with a row counter attached: the count is collected by the
     action that runs `df` (a write), not by an extra job."""
@@ -286,9 +300,7 @@ def _dimension_flow(
             bands = _scd2_changed_bands(target, customer, keys, attrs)
             metrics["dim_bands_rewritten"] = len(bands)
             if bands:
-                _scd2_rewrite_bands(
-                    spark, target, customer, keys, attrs, batch_ts, dim_path, bands
-                )
+                _scd2_rewrite_bands(target, customer, keys, attrs, batch_ts, dim_path, bands)
             # a re-read, not an Observation: the band rewrite sees only the
             # changed bands, and an Observation under the changed-bands
             # join's broadcast build side collects nothing

@@ -31,21 +31,27 @@ registered `stream_scd2_sink` query IS that one-pass formulation
 hash-checks the semantics in batch while tests/test_streaming.py proves
 the streaming path (crash + restart included) converges to the same rows.
 
-A day SPLIT ACROSS micro-batches still converges to the spec: each publish
-carries a `_snaphead/` sidecar with the head day's per-key latest
-(ts, tiebreak), so when a later batch brings more rows for the same day the
-fold recomputes the true per-(key, day) argmax across batches, rolls the
-head day back (drop its versions, reopen rows closed at it), and re-applies
-— arrival order can never beat event-time order, and no zero-length
-versions are emitted. Event-time DAY regression across batches (a batch
-whose earliest day precedes the folded head) violates the fold's watermark
-assumption and raises — that case belongs to scd2_rebuild_from_log.
+A day SPLIT ACROSS micro-batches still converges to the spec. Every
+applied batch is first appended to the bronze event log (`<dim>.log/`), and
+the marker records the folded head day (`last_day`). When a batch's
+earliest fresh day is the head day, the fold reads the head day back from
+the log (its slice ts >= head holds every earlier row of that day and this
+batch's rows), rolls the head day back (drop its versions, reopen rows
+closed at it), and re-folds: the per-(key, day) argmax runs across batches,
+arrival order can never beat event-time order, and no zero-length versions
+are emitted. This needs a log kept since batch 0 (`has_log` in the marker);
+without one, the re-fold fails loudly toward scd2_rebuild_from_log.
+Event-time DAY regression across batches (a batch whose earliest day
+precedes the folded head) violates the fold's watermark assumption: it
+raises, or under late_policy="reconcile" takes the bounded re-fold
+described in `scd2_stream_sink`.
 
-Scale: per micro-batch the only shuffles are the snapshot window pass and
-one semi/anti key join against the dimension — independent of how many
-event-days the batch spans; the dimension rewrite is bounded by dimension
-size, not stream history (the partition-pruned band rewrite in
-pipeline.py applies here unchanged once the dimension is band-partitioned).
+Scale: per micro-batch the in-order fold has ONE shuffle (a repartition on
+the keys that serves every window of `scd2_fold_log`), independent of how
+many event-days the batch spans; late days add semi/anti joins on the
+affected-key set. The dimension rewrite is bounded by dimension size, not
+stream history (the partition-pruned band rewrite in pipeline.py applies
+here unchanged once the dimension is band-partitioned).
 State on the streaming side is just the checkpoint offsets — the
 dimension itself is the state, which is what makes the pattern restartable.
 """
@@ -56,8 +62,7 @@ import json
 import os
 import shutil
 
-from pyspark import inheritable_thread_target
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..operators.etl import _FAR_FUTURE
@@ -68,11 +73,22 @@ _STATE_FILE = "_scd2_sink_state.json"
 
 
 def _read_state(dim_path: str) -> dict | None:
-    try:
-        with open(os.path.join(dim_path, _STATE_FILE)) as f:
-            return json.load(f)
-    except (OSError, ValueError):
+    """The published state marker, or None when nothing is published at
+    `dim_path` yet. A directory there without a readable marker was not
+    published by a sink: folding into it as a first batch would replace the
+    whole table with the batch, so it is refused."""
+    if not os.path.exists(dim_path):
         return None
+    marker = os.path.join(dim_path, _STATE_FILE)
+    try:
+        with open(marker) as f:
+            return json.load(f)
+    except (OSError, ValueError) as e:
+        raise ValueError(
+            f"streaming sink: {dim_path} exists but has no readable state "
+            f"marker ({marker}: {e}); refusing to fold into a table this "
+            "sink did not publish"
+        ) from e
 
 
 def swap_in(tmp: str, path: str) -> None:
@@ -100,82 +116,17 @@ def recover_swap(path: str) -> None:
 recover_dim = recover_swap  # the sinks' name for it
 
 
-def run_concurrently(spark: SparkSession, *thunks) -> list:
-    """Run each thunk on its own thread and return their results in order.
-    Every thread inherits the caller's Spark local properties (job group,
-    job description, scheduler pool), so the jobs it starts are attributed
-    like the caller's own. Waits for ALL thunks, then re-raises the first
-    failure in argument order: a failed thunk never leaves another one
-    writing behind the caller's back."""
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=len(thunks)) as ex:
-        futures = [ex.submit(inheritable_thread_target(spark)(t)) for t in thunks]
-    return [f.result() for f in futures]
-
-
-_SNAP_DIR = "_snaphead"  # leading "_": hidden from Spark's parquet reader
-
-
-def atomic_swap_publish(
-    df: DataFrame, dim_path: str, state: dict, snap: DataFrame | None = None
-) -> dict[str, float]:
-    """Write `df` + state marker (+ the head-day snapshot sidecar) to a
-    temp dir, then swap it live with `swap_in` (same discipline as
-    pipeline._overwrite_in_place, plus the marker travels INSIDE the
-    published dir so dimension, sidecar, and batch_id are one atomic
-    unit). Returns per-step wall seconds (dim/snap parquet write jobs,
-    marker+rename swap) so the soak harness can attribute the publish
-    phase's per-batch constant instead of reporting one opaque number.
-
-    The dimension and sidecar writes are independent jobs that both land
-    in tmp dirs before any rename, so they run on two threads
-    (`run_concurrently`, which keeps the caller's job group on both).
-    Round-10 soak attribution: sequential they
-    split the publish phase 50/50 (0.69 + 0.75 s/batch, renames 3 ms);
-    overlapped, the phase measured 1.45 → 1.17 s/batch — each job's own
-    wall RISES under contention (both are small driver/scheduler-bound
-    jobs, so overlap buys ~20-25%, not 2×; the honest measured shape, kept
-    because the win is free of correctness risk). Atomicity is untouched:
-    the swap starts only after BOTH writes complete."""
-    import time as _time
-
+def atomic_swap_publish(df: DataFrame, dim_path: str, state: dict) -> None:
+    """Write `df` and the state marker to a temp dir, then swap it live
+    with `swap_in` (same discipline as pipeline._overwrite_in_place). The
+    marker travels INSIDE the published dir, so the table and the batch_id
+    that produced it are one atomic unit."""
     tmp = dim_path + ".tmp-swap"
     shutil.rmtree(tmp, ignore_errors=True)
-    t0 = _time.perf_counter()
-
-    def _timed(write):
-        s = _time.perf_counter()
-        write()
-        return _time.perf_counter() - s
-
-    if snap is not None:
-        # the sidecar writes to a SIBLING tmp and is renamed inside after
-        # both jobs finish: nesting it under `tmp` mid-flight would race
-        # the dimension job's overwrite-mode delete-at-start of `tmp`
-        tmp_snap = dim_path + ".tmp-snap"
-        shutil.rmtree(tmp_snap, ignore_errors=True)
-        dim_sec, snap_sec = run_concurrently(
-            df.sparkSession,
-            lambda: _timed(lambda: df.write.mode("overwrite").parquet(tmp)),
-            lambda: _timed(lambda: snap.write.mode("overwrite").parquet(tmp_snap)),
-        )
-        os.rename(tmp_snap, os.path.join(tmp, _SNAP_DIR))
-    else:
-        dim_sec, snap_sec = _timed(
-            lambda: df.write.mode("overwrite").parquet(tmp)
-        ), 0.0
-    t2 = _time.perf_counter()
+    df.write.mode("overwrite").parquet(tmp)
     with open(os.path.join(tmp, _STATE_FILE), "w") as f:
         json.dump(state, f)
     swap_in(tmp, dim_path)
-    t3 = _time.perf_counter()
-    return {
-        "publish_dim_write": dim_sec,
-        "publish_snap_write": snap_sec,
-        "publish_swap": t3 - t2,
-        "publish_writes_wall": t2 - t0,
-    }
 
 
 _LOG_SUFFIX = ".log"  # bronze event-log sidecar, OUTSIDE the swapped dir
@@ -320,8 +271,8 @@ def scd2_stream_sink(dim_path, keys, attrs, ts_col="ts", tiebreak="event_id",
         if st is not None and batch_id <= st["batch_id"]:
             fold.skipped.append(batch_id)  # re-delivered: already published
             return
-        # the days collect, the log append and both publish writes each
-        # read the batch: materialize it once, and release it on every exit
+        # the days collect, the log append and the publish write each read
+        # the batch: materialize it once, and release it on every exit
         batch_df.persist()
         try:
             _apply(batch_df, batch_id, st)
@@ -348,18 +299,16 @@ def scd2_stream_sink(dim_path, keys, attrs, ts_col="ts", tiebreak="event_id",
         _t = _mark("days_collect", _t)
         if not all_days:
             return
-        days = all_days
         last_day = st.get("last_day") if st is not None else None
         if st is not None and last_day is None:
-            # Pre-sidecar publisher state (marker without 'last_day', no
-            # _snaphead dir): the folded head is UNKNOWABLE from the
-            # published dimension — a head day whose snapshot matched the
-            # previous state folds as a no-op and leaves no trace in
-            # effective_from, so max(effective_from) is only a LOWER bound
-            # on the true head and any derived ordering check could let a
-            # repeated/split day silently double-fold (exactly the bug the
-            # guards below exist to prevent). The only sound behavior is
-            # to fail loudly and route to an explicit rebuild.
+            # Pre-sidecar publisher state (marker without 'last_day'): the
+            # folded head is UNKNOWABLE from the published dimension — a
+            # head day whose snapshot matched the previous state folds as
+            # a no-op and leaves no trace in effective_from, so
+            # max(effective_from) is only a LOWER bound on the true head
+            # and any derived ordering check could let a repeated/split
+            # day silently double-fold. The only sound behavior is to fail
+            # loudly and route to an explicit rebuild.
             raise ValueError(
                 f"scd2 stream sink: dimension at {dim_path} was published "
                 "by a pre-sidecar sink (state marker has no 'last_day'), "
@@ -379,61 +328,73 @@ def scd2_stream_sink(dim_path, keys, attrs, ts_col="ts", tiebreak="event_id",
             # mis-folding.
             raise ValueError(
                 f"scd2 stream sink: batch {batch_id} contains day "
-                f"{days[0]} older than the folded head {last_day}"
+                f"{all_days[0]} older than the folded head {last_day}"
             )
-        if late_days and not (st or {}).get("has_log"):
+        days = [d for d in all_days if d not in late_days]
+        refold_head = bool(days) and str(days[0]) == last_day
+        if (late_days or refold_head) and not st.get("has_log"):
+            # late days and a split head day both re-read folded days
+            # from the bronze log, which must hold them all
             raise ValueError(
-                f"scd2 stream sink: batch {batch_id} contains late days but "
-                "the dimension predates the bronze event log (no 'has_log' "
-                "in its state marker) — cannot refold affected keys; "
-                "rebuild via scd2_rebuild_from_log"
+                f"scd2 stream sink: batch {batch_id} re-folds days the "
+                "dimension already holds, but the dimension predates the "
+                "bronze event log (no 'has_log' in its state marker) — "
+                "cannot refold them; rebuild via scd2_rebuild_from_log"
             )
         log_cols = [*keys, *attrs, ts_col, tiebreak]
         _append_batch_log(batch_df, dim_path, batch_id, log_cols)
         _t = _mark("log_append", _t)
         # keep the bronze log at O(log batches) dirs (and heal any torn
-        # merge) BEFORE the reconcile path reads it below
+        # merge) BEFORE the fold reads it below
         _compact_log(spark, dim_path, st["batch_id"] if st is not None else -1)
         _t = _mark("log_compact", _t)
-        days = [d for d in all_days if d not in late_days]
+        ts_t = dict(batch_df.dtypes)[ts_col]
+        tb_t = dict(batch_df.dtypes)[tiebreak]
+
+        def _log_since(d: str) -> DataFrame:
+            # the ts predicate pushes to the log scan, where parquet
+            # min/max row-group stats skip runs that end before `d`
+            return (
+                spark.read.parquet(dim_path + _LOG_SUFFIX)
+                .select(*log_cols)
+                .filter(F.col(ts_col) >= F.lit(d).cast(ts_t))
+            )
+
+        def _as_events(bands: DataFrame) -> DataFrame:
+            # every band enters a fold as one synthetic event at its own
+            # effective_from (tiebreak null): a seed (key, day) group is a
+            # singleton, since seed days never collide with the event days
+            # folded with it, so the argmax order never looks at the null
+            return bands.select(
+                *keys,
+                *attrs,
+                F.col("effective_from").cast(ts_t).alias(ts_col),
+                F.lit(None).cast(tb_t).alias(tiebreak),
+            )
+
         target = spark.read.parquet(dim_path) if st is not None else None
-        w = Window.partitionBy(*keys).orderBy(F.desc(ts_col), F.desc(tiebreak))
-        snap_final = None
         if days:
-            # ONE-PASS MULTI-DAY FOLD (round-8 perf rework; rows produced
-            # are identical to the former per-day scd2_apply loop — the
-            # module docstring's fold≡rebuild induction IS this
-            # equivalence): union the batch rows with EVERY published
-            # current row (the current's effective_from stands in as its
-            # "day": effective_from values are day boundaries by
-            # construction and strictly precede every foldable batch day),
-            # take per-(key, day) latest snapshots, drop consecutive no-op
-            # days, rebuild bands with lead(). A current row with no batch
-            # events is a single-event group and reproduces itself
-            # verbatim, so no key-set join is needed at all. The per-day
-            # loop needed one self-referencing scd2_apply join PLUS a
-            # localCheckpoint per event-day (scd2_apply consumes `target`
-            # twice, so an uncheckpointed chain recomputes exponentially);
-            # this plan has ONE exchange (repartition on keys — both the
-            # per-day argmax window and the band windows are satisfied by
-            # it), zero joins, zero broadcasts, zero checkpoints in the
-            # normal path. Same O(dimension) per batch the old full-outer
-            # scd2_apply paid, with k event-days for the price of one.
-            rows = batch_df.select(*keys, *attrs, ts_col, tiebreak)
-            if late_days:
-                rows = rows.filter(~day.isin(late_days))
-            if last_day is not None and str(days[0]) == last_day:
+            # ONE-PASS MULTI-DAY FOLD (the module docstring's fold≡rebuild
+            # induction): the batch rows plus every published current row
+            # as a seed event go through `scd2_fold_log` — per-(key, day)
+            # latest snapshots, consecutive no-op days dropped, bands
+            # rebuilt with lead(). A current row with no batch events is a
+            # single-event group and reproduces itself verbatim, so no
+            # key-set join is needed. The repartition on keys is the
+            # plan's ONE exchange: it satisfies both the (keys, day)
+            # argmax window and the (keys) band windows; no joins, no
+            # broadcasts, no checkpoints.
+            if refold_head:
                 # HEAD-DAY RE-FOLD (a day split across micro-batches): the
-                # published head snapshot sidecar carries each key's
-                # day-d latest (ts, tiebreak), so the true per-(key, day)
-                # argmax is recomputed across batches — and day d's fold
-                # is rolled back (drop from==d versions, reopen rows
-                # closed at d) before re-folding. Without this, a later
-                # batch's row for an already-folded day would emit
-                # zero-length versions and let arrival order beat
-                # event-time order.
-                prev_snap = spark.read.parquet(os.path.join(dim_path, _SNAP_DIR))
-                rows = rows.unionByName(prev_snap.select(*rows.columns))
+                # log slice from the head day on holds every earlier row
+                # of that day plus this batch's fresh rows, so the true
+                # per-(key, day) argmax is recomputed across batches — and
+                # the head day's fold is rolled back (drop from==head
+                # versions, reopen rows closed at it) before re-folding.
+                # Without this, a later batch's row for an already-folded
+                # day would emit zero-length versions and let arrival
+                # order beat event-time order.
+                rows = _log_since(last_day)
                 d_lit = F.lit(last_day).cast("timestamp")
                 target = target.filter(
                     F.col("effective_from") != d_lit
@@ -449,97 +410,38 @@ def scd2_stream_sink(dim_path, keys, attrs, ts_col="ts", tiebreak="event_id",
                         F.lit(_FAR_FUTURE).cast("timestamp"),
                     ).otherwise(F.col("effective_to")),
                 )
+            else:
+                rows = batch_df.select(*log_cols)
+                if late_days:
+                    rows = rows.filter(~day.isin(late_days))
             hist = None
             if target is not None:
-                # every published current row enters the fold as its own
-                # seed event (effective_from as ts; tiebreak null — seed
-                # (key, day) groups are singletons, so the argmax order
-                # never looks at it); seed days never collide with batch
-                # days (non-refold days exceed last_day >= every
-                # effective_from; the refold rollback drops from==head)
-                ts_t = dict(batch_df.dtypes)[ts_col]
-                tb_t = dict(batch_df.dtypes)[tiebreak]
-                seed = target.filter(F.col("is_current")).select(
-                    *keys,
-                    *attrs,
-                    F.col("effective_from").cast(ts_t).alias(ts_col),
-                    F.lit(None).cast(tb_t).alias(tiebreak),
-                )
-                rows = rows.unionByName(seed)
+                # seed days never collide with batch days: fresh days
+                # exceed last_day >= every effective_from, and the refold
+                # rollback drops from==head
+                rows = rows.unionByName(_as_events(target.filter(F.col("is_current"))))
                 hist = target.filter(~F.col("is_current"))
-            # one exchange for the whole fold: hash(keys) satisfies both
-            # the (keys, _d) argmax window and the (keys) band windows
-            snap = (
-                rows.repartition(*keys)
-                .withColumn("_d", day.cast("timestamp"))
-                .withColumn(
-                    "_rn",
-                    F.row_number().over(
-                        Window.partitionBy(*keys, "_d").orderBy(
-                            F.desc(ts_col), F.desc(tiebreak)
-                        )
-                    ),
-                )
-                .filter(F.col("_rn") == 1)
-                .select(*keys, *attrs, ts_col, tiebreak, "_d")
-            )
-            # seed rows can never surface here: their _d predates days[-1]
-            snap_final = snap.filter(
-                F.col("_d") == F.lit(str(days[-1])).cast("timestamp")
-            ).select(*log_cols)
-            wd = Window.partitionBy(*keys).orderBy("_d")
-            lagged = snap.select(
-                *keys,
-                *attrs,
-                "_d",
-                F.lag("_d").over(wd).alias("_pd"),
-                *[F.lag(a).over(wd).alias(f"_p_{a}") for a in attrs],
-            )
-            chg_pred = None
-            for a in attrs:
-                c = ~F.col(f"_p_{a}").eqNullSafe(F.col(a))
-                chg_pred = c if chg_pred is None else (chg_pred | c)
-            chg = lagged.filter(F.col("_pd").isNull() | chg_pred)
-            folded = chg.select(
-                *keys,
-                *attrs,
-                F.col("_d").alias("effective_from"),
-                F.coalesce(
-                    F.lead("_d").over(wd), F.lit(_FAR_FUTURE).cast("timestamp")
-                ).alias("effective_to"),
-                F.lead("_d").over(wd).isNull().alias("is_current"),
-            )
+            folded = scd2_fold_log(rows.repartition(*keys), keys, attrs, ts_col, tiebreak)
             target = (
                 hist.unionByName(folded.select(*hist.columns))
                 if hist is not None
                 else folded
             )
         _t = _mark("fold", _t)
-        new_last = str(days[-1]) if days else last_day
-        if not days:
-            # entire batch was late: keep the published head-day sidecar
-            # (refreshed below for the affected keys)
-            snap_final = spark.read.parquet(
-                os.path.join(dim_path, _SNAP_DIR)
-            ).localCheckpoint()
         if late_days:
-            # BOUNDED RECONCILIATION, day-pruned (round-9): the affected
-            # keys are re-folded from the bronze log SINCE d0 = the
-            # earliest late day only, each seeded with its published band
-            # effective at d0⁻ (effective_from < d0 <= effective_to) as a
-            # synthetic event at its own effective_from — the same seed
-            # trick the in-order fold uses for current rows. Bands fully
-            # before d0 (effective_to < d0) are kept verbatim: the
+            # BOUNDED RECONCILIATION, day-pruned: the affected keys are
+            # re-folded from the bronze log SINCE d0 = the earliest late
+            # day only, each seeded with its published bands that start
+            # before d0. Bands fully before d0 cannot change: the
             # published dimension equals fold(full log) inductively (the
-            # soak's convergence assertion), late rows are all >= d0, so
-            # pre-d0 bands cannot change. The ts >= d0 predicate pushes to
-            # the log scan, where parquet min/max row-group stats skip
-            # compacted runs that predate d0 entirely — reconcile cost is
-            # O(affected keys' rows since d0), not O(their full history).
-            # The head-day sidecar rows are recomputed from the same slice
-            # (new_last > every late day >= d0, so day new_last is in it);
-            # everything else keeps the in-order fold above. Joins are
-            # semi/anti on the (small) affected-key set.
+            # soak's convergence assertion) and late rows are all >= d0.
+            # Consecutive seed bands differ by the SCD2 invariant, so the
+            # fold's no-op suppression regenerates each verbatim and lead()
+            # re-derives the d0-straddling band's effective_to together
+            # with the post-d0 slice. Cost is O(affected keys' rows since
+            # d0), not O(their full history); joins are semi/anti on the
+            # (small) affected-key set, everything else keeps the in-order
+            # fold above.
             if days:
                 # the in-order fold above feeds the anti join, the
                 # seed-band slice, and the publish write — materialize its
@@ -548,92 +450,39 @@ def scd2_stream_sink(dim_path, keys, attrs, ts_col="ts", tiebreak="event_id",
             affected = (
                 batch_df.filter(day.isin(late_days)).select(*keys).distinct()
             )
-            ts_t = dict(batch_df.dtypes)[ts_col]
-            tb_t = dict(batch_df.dtypes)[tiebreak]
-            d0 = F.lit(str(min(late_days))).cast(ts_t)
-            log_df = spark.read.parquet(dim_path + _LOG_SUFFIX).select(*log_cols)
-            # materialize the affected keys' log slice ONCE: it feeds both
-            # the history re-fold and the head-day sidecar recompute, and
-            # an uncheckpointed aff_log re-scans the log slice per
-            # consumer. `affected` itself stays lazy: it is a tiny
-            # distinct over one micro-batch, cheaper to re-derive as a
-            # broadcast build than to checkpoint as its own Spark action.
-            aff_log = (
-                log_df.filter(F.col(ts_col) >= d0)
-                .join(affected, on=list(keys), how="left_semi")
-                .localCheckpoint()
-            )
-            tgt_types = dict(target.dtypes)
-            # every pre-d0 band of an affected key enters the re-fold as a
-            # synthetic event at its own effective_from (attrs = band
-            # attrs, tiebreak null): consecutive bands differ by the SCD2
-            # invariant, so the fold's no-op suppression regenerates each
-            # verbatim and lead() re-derives the d0-straddling band's
-            # effective_to together with the post-d0 slice. Seed (key,
-            # day) groups are singletons (every seed day < d0 <= every
-            # slice day), so the null tiebreak never orders anything.
-            seeds = (
-                target.join(affected, on=list(keys), how="left_semi")
-                .filter(F.col("effective_from") < d0)
-                .select(
-                    *keys,
-                    *attrs,
-                    F.col("effective_from").cast(ts_t).alias(ts_col),
-                    F.lit(None).cast(tb_t).alias(tiebreak),
+            d0 = str(min(late_days))
+            seeds = _as_events(
+                target.join(affected, on=list(keys), how="left_semi").filter(
+                    F.col("effective_from") < F.lit(d0).cast(ts_t)
                 )
             )
             rebuilt = scd2_fold_log(
-                aff_log.select(*seeds.columns).unionByName(seeds),
+                _log_since(d0)
+                .join(affected, on=list(keys), how="left_semi")
+                .unionByName(seeds),
                 keys, attrs, ts_col, tiebreak,
             )
-            rebuilt = rebuilt.select(
-                *keys,
-                *attrs,
-                F.col("effective_from").cast(tgt_types["effective_from"]).alias(
-                    "effective_from"
-                ),
-                F.col("effective_to").cast(tgt_types["effective_to"]).alias(
-                    "effective_to"
-                ),
-                "is_current",
-            )
-            # no localCheckpoint on the final relations: target/snap_final
-            # are each consumed once by atomic_swap_publish, which writes
-            # to the tmp dir BEFORE the renames — every parquet read in
-            # their lineage resolves while the live dir still exists, and
-            # two materialization jobs per reconcile batch disappear
+            # no localCheckpoint on the final relation: atomic_swap_publish
+            # writes it to the tmp dir BEFORE the renames, so every
+            # parquet read in its lineage resolves while the live dir
+            # still exists
             target = (
                 target.join(affected, on=list(keys), how="left_anti")
                 .unionByName(rebuilt.select(*target.columns))
             )
-            head_snap = (
-                aff_log.filter(
-                    F.date_trunc("day", F.col(ts_col)).cast("string") == new_last
-                )
-                .withColumn("_rn", F.row_number().over(w))
-                .filter(F.col("_rn") == 1)
-                .select(*log_cols)
-            )
-            snap_final = (
-                snap_final.join(affected, on=list(keys), how="left_anti")
-                .unionByName(head_snap)
-            )
         _t = _mark("reconcile", _t)
-        steps = atomic_swap_publish(
+        atomic_swap_publish(
             target,
             dim_path,
             {
                 "batch_id": batch_id,
-                "last_day": new_last,
+                "last_day": str(days[-1]) if days else last_day,
                 # the log is complete only if maintained from batch 0 —
-                # reconciliation refuses to run from a partial log
+                # every re-fold refuses to run from a partial log
                 "has_log": st.get("has_log", False) if st is not None else True,
             },
-            snap=snap_final,
         )
-        for k, v in steps.items():
-            fold.phase_sec[k] = fold.phase_sec.get(k, 0.0) + v
-        _t = _mark("publish", _t)
+        _mark("publish", _t)
         fold.applied.append(batch_id)
 
     fold.applied, fold.skipped = [], []
@@ -655,8 +504,9 @@ def scd2_fold_log(
     day-batched streaming fold converges to — see module docstring for the
     fold≡rebuild equivalence): latest attrs per (keys, day) → drop
     consecutive no-op days → effective-date with lead(). Two window passes
-    on the same key partitioning. Also the replacement relation the
-    `late_policy="reconcile"` path computes for late-affected keys."""
+    on the same key partitioning. The sink's only fold: the in-order path
+    folds each batch (with its seed events) through it, and the
+    `late_policy="reconcile"` path the late-affected keys' log slice."""
     snap = (
         log.withColumn("_d", F.date_trunc("day", F.col(ts_col)))
         .withColumn(

@@ -42,9 +42,7 @@ def test_run_concurrently_waits_for_all_and_raises_first_failure(spark):
 
     import pytest
 
-    from t20_database_etl_pipeline_assignment_spark.streaming.scd2_sink import (
-        run_concurrently,
-    )
+    from t20_database_etl_pipeline_assignment_spark.pipeline import run_concurrently
 
     shared: dict = {}
     finished = []

@@ -150,7 +150,7 @@ def _sink_scenario(draw):
     )
     crashes = draw(
         st.lists(
-            st.sampled_from(["none", "redeliver", "tear"]),
+            st.sampled_from(["none", "redeliver", "tear", "log_only"]),
             min_size=len(batches),
             max_size=len(batches),
         )
@@ -173,17 +173,31 @@ def _sink_scenario(draw):
         ["tear", "redeliver", "tear"],
     )
 )
+@example(
+    scenario=(
+        # day 1 split across batches 0 and 1; batch 1 crashed after its log
+        # append, so its head-day re-fold reads a log that already holds it
+        [
+            [(1, 1, 1, "a", 1.0), (2, 1, 0, "b", 1.0)],
+            [(1, 1, 0, "b", 2.0), (2, 1, 2, "a", 2.0)],
+            [(1, 2, 0, "b", 2.0)],
+        ],
+        ["none", "log_only", "log_only"],
+    )
+)
 def test_scd2_sink_converges_under_any_split_and_crash(spark, tmp_path_factory, scenario):
     """For ANY split of events into micro-batches — day-straddling,
     duplicate-timestamp, event-time-regressing — with re-deliveries and
-    torn swaps injected after every barrier, the reconcile-policy sink must
-    land on exactly the change-log rebuild of the full event set."""
+    torn swaps injected after every barrier, and crashes between the log
+    append and the publish, the reconcile-policy sink must land on exactly
+    the change-log rebuild of the full event set."""
     import os
     import uuid
 
     from pyspark.sql import functions as F2
 
     from t20_database_etl_pipeline_assignment_spark.streaming.scd2_sink import (
+        _append_batch_log,
         recover_dim,
         scd2_daily_fold_spec,
         scd2_stream_sink,
@@ -205,7 +219,12 @@ def test_scd2_sink_converges_under_any_split_and_crash(spark, tmp_path_factory, 
     sink = scd2_stream_sink(
         dim, ["user_id"], ["event_type", "value"], late_policy="reconcile"
     )
+    log_cols = ["user_id", "event_type", "value", "ts", "event_id"]
     for i, (b, crash) in enumerate(zip(dfs, crashes)):
+        if crash == "log_only":
+            # crash after the log append, before the publish: the batch is
+            # in the log but not in the dimension, and is re-delivered
+            _append_batch_log(b, dim, i, log_cols)
         sink(b, i)
         if crash == "redeliver":
             sink(b, i)  # at-least-once re-delivery: must skip, not refold

@@ -452,9 +452,8 @@ def test_scd2_sink_recovers_between_rename_crash(spark, tmp_path):
 
 
 def test_publish_writes_keep_caller_job_group(spark, tmp_path):
-    """The dimension and sidecar writes run on two threads: their jobs
-    must carry the caller's job group, or per-group job counters and
-    stage telemetry miss the publish phase."""
+    """The publish write's jobs must carry the caller's job group, or
+    per-group job counters and stage telemetry miss the publish phase."""
     from t20_database_etl_pipeline_assignment_spark.streaming.scd2_sink import (
         atomic_swap_publish,
     )
@@ -462,18 +461,17 @@ def test_publish_writes_keep_caller_job_group(spark, tmp_path):
     sc = spark.sparkContext
     tracker = sc.statusTracker()
     df = spark.createDataFrame([(1, "a"), (2, "b")], "k long, v string")
-    snap = spark.createDataFrame([(1, "a")], "k long, v string")
     sc._jsc.sc().listenerBus().waitUntilEmpty()
     ungrouped = set(tracker.getJobIdsForGroup(None))
     sc.setJobGroup("publish_group", "publish_group")
     try:
-        atomic_swap_publish(df, str(tmp_path / "dim"), {"batch_id": 0}, snap=snap)
+        atomic_swap_publish(df, str(tmp_path / "dim"), {"batch_id": 0})
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
     sc._jsc.sc().listenerBus().waitUntilEmpty()
     assert set(tracker.getJobIdsForGroup(None)) == ungrouped
-    assert len(tracker.getJobIdsForGroup("publish_group")) >= 2
+    assert len(tracker.getJobIdsForGroup("publish_group")) >= 1
 
 
 def test_stateful_cusum_parity(spark, sf_dir):
@@ -695,7 +693,7 @@ def test_scd2_sink_late_day_reconciliation(spark, tmp_path):
 
 def test_scd2_sink_pre_sidecar_dim_guarded(spark, tmp_path):
     """A dimension published by the pre-sidecar sink (state marker without
-    'last_day', no _snaphead dir) must fail loudly on ANY fold attempt:
+    'last_day') must fail loudly on ANY fold attempt:
     the true folded head is unknowable (a head day that folded as a no-op
     leaves no trace in effective_from, so max(effective_from) is only a
     lower bound), which means no ordering check can be verified — the
@@ -705,12 +703,10 @@ def test_scd2_sink_pre_sidecar_dim_guarded(spark, tmp_path):
     import datetime as dt
     import json
     import os
-    import shutil
 
     import pytest as _pytest
 
     from t20_database_etl_pipeline_assignment_spark.streaming.scd2_sink import (
-        _SNAP_DIR,
         _STATE_FILE,
         scd2_stream_sink,
     )
@@ -722,9 +718,8 @@ def test_scd2_sink_pre_sidecar_dim_guarded(spark, tmp_path):
     dim = str(tmp_path / "dim_presidecar")
     sink = scd2_stream_sink(dim, ["user_id"], ["event_type", "value"])
     sink(day2, 0)
-    # downgrade the published dim to the pre-sidecar layout: drop the
-    # snapshot dir and rewrite the marker without 'last_day'
-    shutil.rmtree(os.path.join(dim, _SNAP_DIR))
+    # downgrade the published dim to the pre-sidecar layout: rewrite the
+    # marker without 'last_day'
     with open(os.path.join(dim, _STATE_FILE), "w") as f:
         json.dump({"batch_id": 0}, f)
 
@@ -743,6 +738,140 @@ def test_scd2_sink_pre_sidecar_dim_guarded(spark, tmp_path):
     # the dimension itself is untouched by the refused folds
     got = spark.read.parquet(dim).select("event_type", "is_current").collect()
     assert [(r.event_type, r.is_current) for r in got] == [("view", True)]
+
+
+def test_scd2_sink_head_day_refold_needs_log(spark, tmp_path):
+    """A marker with 'last_day' but no 'has_log' (a dimension published
+    before the bronze log existed): a batch on the head day would re-fold
+    that day from the log, so it raises the has_log error and leaves the
+    dimension untouched; a batch on a strictly newer day still folds."""
+    import datetime as dt
+    import json
+    import os
+
+    import pytest as _pytest
+
+    from t20_database_etl_pipeline_assignment_spark.streaming.scd2_sink import (
+        _STATE_FILE,
+        scd2_stream_sink,
+    )
+
+    schema = "event_id long, ts timestamp, user_id long, event_type string, value double"
+    dim = str(tmp_path / "dim_prelog")
+    sink = scd2_stream_sink(dim, ["user_id"], ["event_type", "value"])
+    sink(spark.createDataFrame([(1, dt.datetime(2024, 1, 2, 1), 1, "view", 1.0)], schema), 0)
+    marker = os.path.join(dim, _STATE_FILE)
+    with open(marker) as f:
+        st = json.load(f)
+    assert st.get("has_log") is True
+    del st["has_log"]
+    with open(marker, "w") as f:
+        json.dump(st, f)
+
+    head = spark.createDataFrame([(2, dt.datetime(2024, 1, 2, 5), 1, "buy", 2.0)], schema)
+    with _pytest.raises(ValueError, match="has_log"):
+        sink(head, 1)
+    got = spark.read.parquet(dim).select("event_type", "is_current").collect()
+    assert [(r.event_type, r.is_current) for r in got] == [("view", True)]
+
+    newer = spark.createDataFrame([(3, dt.datetime(2024, 1, 3, 1), 1, "buy", 2.0)], schema)
+    sink(newer, 1)
+    got = sorted(
+        (r.event_type, r.is_current)
+        for r in spark.read.parquet(dim).select("event_type", "is_current").collect()
+    )
+    assert got == [("buy", True), ("view", False)]
+    assert sink.applied == [0, 1]
+
+
+def test_sinks_refuse_an_existing_table_without_state_marker(spark, tmp_path):
+    """A table at the sink's path that no sink published (no state marker)
+    must not be folded as a first batch, which would replace it with the
+    batch alone: both sinks raise a ValueError naming the path and leave
+    the table as it was. A fresh path still takes its first batch."""
+    import datetime as dt
+
+    import pytest as _pytest
+
+    from t20_database_etl_pipeline_assignment_spark.streaming.cdc_sink import (
+        cdc_stream_sink,
+    )
+    from t20_database_etl_pipeline_assignment_spark.streaming.scd2_sink import (
+        scd2_stream_sink,
+    )
+
+    t0 = dt.datetime(2024, 1, 1)
+    dim_schema = (
+        "user_id long, event_type string, value double, "
+        "effective_from timestamp, effective_to timestamp, is_current boolean"
+    )
+    ev_schema = "event_id long, ts timestamp, user_id long, event_type string, value double"
+    cdc_schema = "event_id long, ts timestamp, user_id long, value double, op string"
+    far = dt.datetime(9999, 12, 31)
+    dim = str(tmp_path / "dim")
+    spark.createDataFrame(
+        [(k, "view", 1.0, t0, far, True) for k in range(10)], dim_schema
+    ).write.parquet(dim)
+    state = str(tmp_path / "cdc")
+    spark.createDataFrame(
+        [(k, t0, k, 1.0, "U") for k in range(10)], cdc_schema
+    ).write.parquet(state)
+
+    ev = spark.createDataFrame([(99, t0 + dt.timedelta(days=1), 1, "buy", 2.0)], ev_schema)
+    cdc = spark.createDataFrame([(99, t0 + dt.timedelta(days=1), 1, 2.0, "U")], cdc_schema)
+    scd2 = scd2_stream_sink(dim, ["user_id"], ["event_type", "value"])
+    compact = cdc_stream_sink(state, "user_id", ["value"])
+    with _pytest.raises(ValueError, match="state marker") as e:
+        scd2(ev, 0)
+    assert dim in str(e.value)
+    with _pytest.raises(ValueError, match="state marker") as e:
+        compact(cdc, 0)
+    assert state in str(e.value)
+    assert spark.read.parquet(dim).count() == 10
+    assert spark.read.parquet(state).count() == 10
+    assert scd2.applied == compact.applied == []
+
+    fresh_dim, fresh_state = str(tmp_path / "dim2"), str(tmp_path / "cdc2")
+    scd2 = scd2_stream_sink(fresh_dim, ["user_id"], ["event_type", "value"])
+    compact = cdc_stream_sink(fresh_state, "user_id", ["value"])
+    scd2(ev, 0)
+    compact(cdc, 0)
+    assert spark.read.parquet(fresh_dim).count() == 1
+    assert spark.read.parquet(fresh_state).count() == 1
+    assert scd2.applied == compact.applied == [0]
+
+
+def test_scd2_sink_fold_plan_has_one_exchange(spark, tmp_path, monkeypatch):
+    """The in-order fold's published frame shuffles once: the repartition
+    on the keys serves every window of scd2_fold_log, and nothing
+    broadcasts. Pinned for the first batch, a batch that re-folds the head
+    day from the log, and a batch on a new day."""
+    import datetime as dt
+
+    from t20_database_etl_pipeline_assignment_spark.streaming import scd2_sink
+
+    plans = []
+    publish = scd2_sink.atomic_swap_publish
+
+    def capture(df, dim_path, state):
+        plans.append(df._jdf.queryExecution().executedPlan().toString())
+        publish(df, dim_path, state)
+
+    monkeypatch.setattr(scd2_sink, "atomic_swap_publish", capture)
+    schema = "event_id long, ts timestamp, user_id long, event_type string, value double"
+    sink = scd2_sink.scd2_stream_sink(
+        str(tmp_path / "dim"), ["user_id"], ["event_type", "value"]
+    )
+    for i, (day, hour) in enumerate([(1, 1), (1, 5), (2, 1)]):
+        ts = dt.datetime(2024, 1, day, hour)
+        sink(spark.createDataFrame(
+            [(3 * i + u, ts, u, "view" if u % 2 else "buy", float(i)) for u in range(3)],
+            schema,
+        ), i)
+    assert sink.applied == [0, 1, 2] and len(plans) == 3
+    for plan in plans:
+        assert plan.count("Exchange hashpartitioning") == 1, plan
+        assert "BroadcastExchange" not in plan, plan
 
 
 def test_stateful_cusum_ignores_uncalibrated_types(spark, sf_dir):
