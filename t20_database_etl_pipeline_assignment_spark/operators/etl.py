@@ -10,12 +10,13 @@ Design rules:
 - Library functions take DataFrames and return DataFrames — they build
   logical plans, never execute row-at-a-time. `batch_ts` is always a
   parameter (never current_timestamp) for deterministic, replayable runs.
-- Change detection hashes scaled-integer renderings of numeric attrs
-  (sha2-256) — stable across runs and engines, and cheap to compare before
-  any shuffle. At rest the same hash keys the dimension's physical layout:
-  pipeline.py band-partitions dim tables by key hash and rewrites only the
-  bands whose keys changed (_scd2_rewrite_bands — the "only changed
-  partitions rewrite" claim, made real and pinned by tests/test_pipeline.py).
+- Change detection hashes one NULL-safe row encoding (`row_encoding`: a
+  JSON object of the attrs' string renderings, sha2-256) — stable across
+  runs and engines, and cheap to compare before any shuffle. pipeline.py
+  digests the same encoding per key-hash band of the dimension and
+  rewrites only the bands whose digest changed (_scd2_rewrite_bands — the
+  "only changed partitions rewrite" claim, pinned by
+  tests/test_pipeline.py).
 - Scale: each composite is one or two key-partitioned shuffles. The staged
   batch is usually ≪ target → Spark broadcasts it; the target never needs a
   global sort. The registry queries derive (target, staged) pairs
@@ -37,9 +38,22 @@ from ..sources.tables import table
 _FAR_FUTURE = "2200-01-01"  # open-ended sentinel; 9999-12-31 overflows datetime64[ns]
 
 
+def row_encoding(cols: Sequence[str]) -> Column:
+    """One row's columns as a JSON object of their string renderings,
+    NULLs kept: `{"a":null,"b":"x"}` differs from `{"a":"x","b":null}`,
+    and a value holding a separator is quoted, not spliced. The one row
+    encoding that change detection (`_row_hash`) and the dimension's band
+    digests (pipeline.py) hash; Spark's `concat_ws`, `hash` and `xxhash64`
+    all skip NULLs, so none of them may see the raw columns."""
+    return F.to_json(
+        F.struct(*[F.col(c).cast("string").alias(c) for c in cols]),
+        {"ignoreNullFields": "false"},
+    )
+
+
 def _row_hash(cols: Sequence[str]) -> Column:
     """Order-stable attribute hash for change detection (README.md:6)."""
-    return F.sha2(F.concat_ws("||", *[F.col(c).cast("string") for c in cols]), 256)
+    return F.sha2(row_encoding(cols), 256)
 
 
 # ---------------------------------------------------------------------------
@@ -100,62 +114,42 @@ def scd2_apply(
     `batch_ts`, insert new versions open-ended, insert net-new keys.
 
     target schema: keys + attrs + effective_from/effective_to/is_current.
-    Three-way union: history ∪ unchanged-current ∪ (closed + new versions)
-    ∪ net-new. The only shuffle is the key join; staged is broadcast when
-    small (the common nightly-batch shape)."""
+    ONE full outer join of the current rows with the staged rows; each
+    joined key then yields its output rows through one `inline` of a
+    per-row array — a changed key its closed row plus the new version, a
+    net-new key the new version, every other key its current row — and
+    history passes through by union. One join, the staged batch scanned
+    once and the target twice (current and history slices)."""
     far = F.lit(_FAR_FUTURE).cast("timestamp")
     bts = F.lit(batch_ts).cast("timestamp")
+    hist = target.filter(~F.col("is_current")).select(
+        *keys, *attrs, "effective_from", "effective_to", "is_current"
+    )
+    cur = target.filter(F.col("is_current")).select(
+        *keys, *attrs, "effective_from", "effective_to", _row_hash(attrs).alias("_h")
+    )
+    stg = staged.select(*keys, *attrs, _row_hash(attrs).alias("_h"))
+    joined = cur.alias("c").join(stg.alias("s"), on=list(keys), how="full_outer")
 
-    hist = target.filter(~F.col("is_current"))
-    cur = target.filter(F.col("is_current")).withColumn("_h", _row_hash(attrs))
-    stg = staged.withColumn("_h", _row_hash(attrs))
+    def version(side: str, frm: Column, to: Column, current: bool) -> Column:
+        return F.struct(
+            *[F.col(f"{side}.{a}").alias(a) for a in attrs],
+            frm.alias("effective_from"),
+            to.alias("effective_to"),
+            F.lit(current).alias("is_current"),
+        )
 
-    joined = cur.alias("c").join(
-        stg.alias("s"), on=list(keys), how="full_outer"
+    c_from = F.col("c.effective_from")
+    new_version = version("s", bts, far, True)
+    rows = (
+        F.when(F.col("c._h").isNull(), F.array(new_version))
+        .when(
+            F.col("s._h").isNotNull() & (F.col("c._h") != F.col("s._h")),
+            F.array(version("c", c_from, bts, False), new_version),
+        )
+        .otherwise(F.array(version("c", c_from, F.col("c.effective_to"), True)))
     )
-    changed = joined.filter(
-        F.col("c._h").isNotNull()
-        & F.col("s._h").isNotNull()
-        & (F.col("c._h") != F.col("s._h"))
-    )
-    closed = changed.select(
-        *keys,
-        *[F.col(f"c.{a}").alias(a) for a in attrs],
-        F.col("c.effective_from").alias("effective_from"),
-        bts.alias("effective_to"),
-        F.lit(False).alias("is_current"),
-    )
-    new_version = changed.select(
-        *keys,
-        *[F.col(f"s.{a}").alias(a) for a in attrs],
-        bts.alias("effective_from"),
-        far.alias("effective_to"),
-        F.lit(True).alias("is_current"),
-    )
-    unchanged = joined.filter(
-        F.col("c._h").isNotNull()
-        & (F.col("s._h").isNull() | (F.col("c._h") == F.col("s._h")))
-    ).select(
-        *keys,
-        *[F.col(f"c.{a}").alias(a) for a in attrs],
-        F.col("c.effective_from").alias("effective_from"),
-        F.col("c.effective_to").alias("effective_to"),
-        F.col("c.is_current").alias("is_current"),
-    )
-    net_new = joined.filter(F.col("c._h").isNull()).select(
-        *keys,
-        *[F.col(f"s.{a}").alias(a) for a in attrs],
-        bts.alias("effective_from"),
-        far.alias("effective_to"),
-        F.lit(True).alias("is_current"),
-    )
-    return (
-        hist.select(*keys, *attrs, "effective_from", "effective_to", "is_current")
-        .unionByName(unchanged)
-        .unionByName(closed)
-        .unionByName(new_version)
-        .unionByName(net_new)
-    )
+    return hist.unionByName(joined.select(*keys, F.inline(rows)))
 
 
 def scd2_rebuild_from_log(
@@ -200,6 +194,18 @@ def scd2_init(snapshot: DataFrame, batch_ts: str) -> DataFrame:
     )
 
 
+def incr_fresh_rows(
+    loaded: DataFrame, arriving: DataFrame, above_wm: Column, id_col: str
+) -> DataFrame:
+    """The rows of `arriving` above the watermark (`above_wm`, a predicate
+    on its rows) whose ids are not loaded yet. The anti-join on loaded ids
+    is the replay guard: re-delivering a batch, or re-running an append
+    that was torn part-way, adds nothing twice."""
+    return arriving.filter(above_wm).join(
+        loaded.select(id_col), on=id_col, how="left_anti"
+    )
+
+
 def incr_load_watermark(
     loaded: DataFrame, arriving: DataFrame, ts_col: str, id_col: str
 ) -> DataFrame:
@@ -208,13 +214,10 @@ def incr_load_watermark(
     subquery — no driver collect, fully lazy; the anti-join shuffles only
     the arriving batch (small) against loaded ids."""
     wm = loaded.agg(F.max(ts_col).alias("_wm"))
-    fresh = (
-        arriving.crossJoin(F.broadcast(wm))
-        .filter(F.col(ts_col) > F.col("_wm"))
-        .drop("_wm")
-        .join(loaded.select(id_col), on=id_col, how="left_anti")
+    fresh = incr_fresh_rows(
+        loaded, arriving.crossJoin(F.broadcast(wm)), F.col(ts_col) > F.col("_wm"), id_col
     )
-    return loaded.unionByName(fresh)
+    return loaded.unionByName(fresh.drop("_wm"))
 
 
 def dq_quarantine(

@@ -20,28 +20,54 @@ flow opens its own source scan inside its own stage:
   dimension  customer → conform_scd2 (SCD2 upsert of the customer
              dimension at a *parameterized* batch timestamp — no
              current_timestamp, so reruns are deterministic; the nightly
-             run rewrites only the hash bands holding changed keys)
+             run rewrites only the hash bands whose snapshot slice changed)
   events     events → load_events_incremental (first run: full load;
-             after that: high-watermark increment, swapped in atomically)
+             after that: the rows above the watermark, appended)
 
 Each flow is a chain of small, latency-bound jobs (1-11 tasks at sf0.01
 on 4 cores), so one flow alone leaves cores idle that the others fill.
 
+Nightly work follows the change, not the history, through two committed
+markers; both start with `_`, which Spark's and pyarrow's readers skip.
+
+  dim_customer/_dim_state.json  per band: the row total, and a 128-bit
+             digest of the snapshot slice last applied (the sums of two
+             64-bit hashes of each row's `row_encoding`). A night runs one
+             aggregate over the snapshot by band; the bands whose digest
+             differs are folded and swapped in, and their new totals are
+             observed on the band write.
+  events/_events_state.json  the watermark and the row total. A night
+             writes its fresh rows to `events.tmp-append/` and renames the
+             files flat into `events/`.
+
+Crash windows. Each marker is written whole (`write_state`), as `pending`
+before the first rename of a night and as `committed` after the last;
+only a committed marker is trusted. A band swap torn between its renames
+is healed by `recover_band_swaps`, which also downgrades the marker to
+pending. A pending, absent or unreadable marker is rebuilt with one
+aggregate over the table (the dimension's bands, the loaded events), and
+the run then takes its usual path: re-applying a band's unchanged slice
+is a no-op, and the events anti-join on loaded ids adds no row twice. An
+events append torn part-way (pending marker, tmp dir still there) is
+rolled forward before the watermark is taken, so no fresh file is left
+below it; a tmp dir without a pending marker never began its renames and
+is dropped. The first run writes each marker once, after its table, from
+`Observation`s on the table's write.
+
 Audit: structured metrics (row counts per flow, rejects per rule, stage
 durations) via std-lib logging and the returned dict. The counts come from
-the write-side metrics: `Observation`s ride on the writes that already run
-(the fact write carries the DQ split and the fact rows, the events write
-the events rows, the first-run band write the dimension rows), so counting
-costs no extra Spark job. Only the nightly `dim_customer_rows` re-reads the
-dimension: the band rewrite touches a fraction of it.
+the write-side metrics and the markers: `Observation`s ride on the writes
+that already run (the fact write carries the DQ split and the fact rows,
+the events writes the fresh rows, the band writes the band totals), so
+counting costs no extra Spark job.
 
 Failure: every stage logs; a failing stage is logged as FAILED with its
 name and its error propagates. The other flows still run to completion
 and publish their targets; `run_etl` re-raises the first failure (flow
 order: facts, dimension, events) only after all three have finished, so
 no flow is left writing behind the caller. The caller decides retry
-policy; a rerun of the same batch is idempotent. All writes land under a caller-supplied target
-directory (never the fixtures).
+policy; a rerun of the same batch is idempotent. All writes land under a
+caller-supplied target directory (never the fixtures).
 
 Scale: the runner adds NO driver-side data movement of its own — each stage
 is a DataFrame plan. At 100 TB the same runner executes unchanged; only
@@ -50,6 +76,7 @@ session/master config and target paths differ.
 
 from __future__ import annotations
 
+import json
 import logging
 import operator
 import os
@@ -63,18 +90,21 @@ from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from .operators.etl import (
-    _row_hash,
     dq_quarantine,
-    incr_load_watermark,
+    incr_fresh_rows,
+    row_encoding,
     scd2_apply,
     scd2_init,
 )
+from .streaming.scd2_sink import recover_swap, write_state
 from .sources.tables import table
-from .streaming.scd2_sink import recover_swap, swap_in
 
 log = logging.getLogger("t20spark.pipeline")
 
 _N_DIM_BANDS = 16
+_DIM_STATE = "_dim_state.json"  # per-band row totals + snapshot digests
+_EVENTS_STATE = "_events_state.json"  # watermark + row total of events/
+_NO_DIGEST = ["0", "0"]  # the digest of an empty snapshot slice
 
 
 def _dim_band(key) -> Column:
@@ -84,18 +114,31 @@ def _dim_band(key) -> Column:
     return F.pmod(F.xxhash64(key), F.lit(_N_DIM_BANDS)).cast("int")
 
 
-def _scd2_changed_bands(target: DataFrame, staged: DataFrame, keys, attrs) -> list[int]:
-    """Bands containing at least one changed or net-new key. SCD2 never
-    deletes a key absent from the staged batch, so every other band's fold
-    output is bit-identical to its input — those partitions need no
-    rewrite. The collect is bounded by _N_DIM_BANDS rows."""
-    cur = target.filter(F.col("is_current")).select(*keys, _row_hash(attrs).alias("_th"))
-    stg = staged.select(*keys, _row_hash(attrs).alias("_sh"))
-    delta = stg.join(cur, on=list(keys), how="left").filter(
-        F.col("_th").isNull() | (F.col("_th") != F.col("_sh"))
-    )
-    rows = delta.select(_dim_band(F.col(keys[0])).alias("_band")).distinct().collect()
-    return sorted(r["_band"] for r in rows)
+def _digest_terms(cols) -> list[Column]:
+    """The two 64-bit hashes of a row's `row_encoding` whose per-band sums
+    make the band's 128-bit digest. Summed as decimal(38,0): exact, and
+    independent of row order and of the ANSI overflow setting."""
+    enc = row_encoding(cols)
+    return [
+        F.xxhash64(enc).cast("decimal(38,0)"),
+        F.xxhash64(F.lit("t20spark.dim"), enc).cast("decimal(38,0)"),
+    ]
+
+
+def _marker(path: str) -> dict:
+    """The state marker at `path`, or {} when it is absent or unreadable.
+    Only a `committed` marker is trusted; every other state is rebuilt
+    from the table itself."""
+    try:
+        with open(path) as f:
+            st = json.load(f)
+    except (OSError, ValueError):
+        return {}
+    return st if isinstance(st, dict) else {}
+
+
+def _publish_marker(path: str, state: str, **fields) -> None:
+    write_state(path, {"state": state, **fields})
 
 
 def _scd2_rewrite_bands(
@@ -105,23 +148,34 @@ def _scd2_rewrite_bands(
     attrs,
     batch_ts: str,
     dim_path: str,
-    bands: list[int],
+    state: dict[int, dict],
+    changed: list[int],
 ) -> None:
     """Fold ONLY the changed bands through scd2_apply and swap exactly
-    those partition directories (write-to-temp + rename per band, same
-    discipline as _overwrite_in_place). Untouched band files are never
-    opened, rewritten, or re-timestamped — the nightly dimension rewrite
-    is pruned to |changed bands| / _N_DIM_BANDS of the dimension."""
+    those partition directories (write-to-temp + rename per band).
+    Untouched band files are never opened, rewritten, or re-timestamped —
+    the nightly dimension rewrite is pruned to |changed bands| /
+    _N_DIM_BANDS of the dimension. `state` is the new marker's entry per
+    band; the changed bands' row totals are filled in from an Observation
+    on the band write. The marker goes `pending` before the first rename
+    and `committed` after the last."""
     key = F.col(keys[0])
-    tslice = target.filter(F.col("_band").isin(bands)).drop("_band")
-    sslice = staged.filter(_dim_band(key).isin(bands))
+    tslice = target.filter(F.col("_band").isin(changed)).drop("_band")
+    sslice = staged.filter(_dim_band(key).isin(changed))
     folded = scd2_apply(tslice, sslice, keys=keys, attrs=attrs, batch_ts=batch_ts)
+    folded = folded.withColumn("_band", _dim_band(key))
+    counts = Observation()
+    folded = folded.observe(
+        counts, *[F.count(F.when(F.col("_band") == b, 1)).alias(str(b)) for b in changed]
+    )
     tmp = dim_path + ".tmp-bands"
     shutil.rmtree(tmp, ignore_errors=True)
-    folded.withColumn("_band", _dim_band(key)).write.mode("overwrite").partitionBy(
-        "_band"
-    ).parquet(tmp)
-    for b in bands:
+    folded.write.mode("overwrite").partitionBy("_band").parquet(tmp)
+    for b in changed:
+        state[b]["rows"] = counts.get[str(b)]
+    marker = os.path.join(dim_path, _DIM_STATE)
+    _publish_marker(marker, "pending")
+    for b in changed:
         src = os.path.join(tmp, f"_band={b}")
         if not os.path.exists(src):  # defensive: changed band always has rows
             continue
@@ -136,6 +190,7 @@ def _scd2_rewrite_bands(
             os.rename(dst, old)
         os.rename(src, dst)
         shutil.rmtree(old, ignore_errors=True)
+    _publish_marker(marker, "committed", bands=state)
     shutil.rmtree(tmp, ignore_errors=True)
 
 
@@ -145,9 +200,12 @@ def recover_band_swaps(dim_path: str) -> None:
     missing (crash between the two renames) and discarded when the live
     band exists (crash before cleanup). Legacy '_band=N.old' survivors
     from the pre-hidden naming are healed the same way. Idempotent; called
-    at the top of every nightly run."""
+    at the top of every nightly run. Healing a band downgrades the
+    dimension's marker to `pending`, so its per-band state is rebuilt from
+    the healed bands before it is trusted."""
     if not os.path.isdir(dim_path):
         return
+    healed = False
     for name in os.listdir(dim_path):
         band = None
         if name.startswith("_oldband."):
@@ -162,6 +220,10 @@ def recover_band_swaps(dim_path: str) -> None:
             shutil.rmtree(old)
         else:
             os.rename(old, live)
+        healed = True
+    marker = os.path.join(dim_path, _DIM_STATE)
+    if healed and os.path.exists(marker):
+        _publish_marker(marker, "pending")
 
 
 @contextmanager
@@ -178,26 +240,6 @@ def _stage(name: str, metrics: dict):
     finally:
         metrics[f"{name}_sec"] = round(time.perf_counter() - t0, 3)
         log.info("stage %s: done in %.3fs", name, metrics[f"{name}_sec"])
-
-
-def _overwrite_in_place(df: DataFrame, path: str) -> None:
-    """Safely overwrite a parquet dir that `df`'s lineage READS from.
-
-    Spark cannot overwrite a path its own plan is still scanning, and
-    caching the plan first is no guarantee: evicted blocks recompute from
-    the source path mid-overwrite. Instead write to a sibling temp dir
-    (fully materializing the plan against the still-intact source), then
-    publish it with `swap_in`. A failed write removes the temp dir and
-    leaves `path` untouched.
-    """
-    tmp = path + ".tmp-swap"
-    shutil.rmtree(tmp, ignore_errors=True)
-    try:
-        df.write.mode("overwrite").parquet(tmp)
-    except Exception:
-        shutil.rmtree(tmp, ignore_errors=True)
-        raise
-    swap_in(tmp, path)
 
 
 def run_concurrently(spark: SparkSession, *thunks) -> list:
@@ -279,49 +321,174 @@ def _dimension_flow(
     spark: SparkSession, sf_dir: str, target_dir: str, batch_ts: str, metrics: dict
 ) -> None:
     """customer → SCD2 dimension: a full band-partitioned write on the
-    first run, the changed bands only after that."""
+    first run, the changed bands only after that.
+
+    A band is changed when the digest of its slice of the staged snapshot
+    differs from the digest the marker holds for the slice last applied.
+    That is sound because the input is a full snapshot: an equal digest
+    means an equal slice, and re-applying an unchanged slice is a no-op —
+    also when a key has left the snapshot, since SCD2 never closes a key
+    for being absent. A marker rebuilt from the dimension's current rows
+    differs from the snapshot's digest only in bands where a key has left,
+    and rewriting those bands is again a no-op. Finding the changed bands
+    is one aggregate over the snapshot by band; the dimension is read only
+    for the changed bands' rows, and `dim_customer_rows` is the sum of
+    the marker's band totals."""
     with _stage("conform_scd2", metrics):
         customer = table(spark, sf_dir, "customer")
         keys, attrs = ["c_custkey"], ["c_name", "c_nationkey", "c_acctbal", "c_mktsegment"]
         dim_path = f"{target_dir}/dim_customer"
+        marker = os.path.join(dim_path, _DIM_STATE)
         recover_band_swaps(dim_path)  # heal any torn swap from a crashed run
+        shutil.rmtree(dim_path + ".tmp-bands", ignore_errors=True)
+        band = _dim_band(F.col(keys[0]))
+        digest = _digest_terms([*keys, *attrs])
+        dim0 = scd2_init(customer, batch_ts="1970-01-01 00:00:00").withColumn("_band", band)
         if not os.path.exists(dim_path):
             # first run: initialize open-ended history, band-partitioned
-            # (applying the first snapshot to its own init is a no-op)
-            dim0, rows = _observe_rows(scd2_init(customer, batch_ts="1970-01-01 00:00:00"))
-            dim0.withColumn("_band", _dim_band(F.col(keys[0]))).write.mode(
-                "overwrite"
-            ).partitionBy("_band").parquet(dim_path)
+            # (applying the first snapshot to its own init is a no-op);
+            # the marker's totals and digests ride on the write
+            seen = Observation()
+            dim0.select("*", *[d.alias(f"_d{i}") for i, d in enumerate(digest)]).observe(
+                seen, *_band_sums(F.col("_band"), F.lit(True), "_d0", "_d1")
+            ).drop("_d0", "_d1").write.mode("overwrite").partitionBy("_band").parquet(dim_path)
+            state = _band_state(seen.get)
+            _publish_marker(marker, "committed", bands=state)
             metrics["dim_bands_rewritten"] = _N_DIM_BANDS
-            metrics["dim_customer_rows"] = rows.get["rows"]
         else:
-            # nightly run: fold + rewrite ONLY bands holding changed keys
-            target = spark.read.parquet(dim_path)
-            bands = _scd2_changed_bands(target, customer, keys, attrs)
-            metrics["dim_bands_rewritten"] = len(bands)
-            if bands:
-                _scd2_rewrite_bands(target, customer, keys, attrs, batch_ts, dim_path, bands)
-            # a re-read, not an Observation: the band rewrite sees only the
-            # changed bands, and an Observation under the changed-bands
-            # join's broadcast build side collects nothing
-            metrics["dim_customer_rows"] = spark.read.parquet(dim_path).count()
+            # nightly run: fold + rewrite ONLY bands whose slice changed
+            def read_dim() -> DataFrame:
+                # the dimension's schema is known: no schema-inference job
+                return spark.read.schema(dim0.schema).parquet(dim_path)
+
+            st = _marker(marker)
+            committed = st.get("state") == "committed"
+            state = (
+                {int(b): e for b, e in st["bands"].items()}
+                if committed
+                else _band_state_from_rows(read_dim(), digest)
+            )
+            snap = {
+                r["_band"]: [str(r["d0"]), str(r["d1"])]
+                for r in customer.groupBy(band.alias("_band"))
+                .agg(*[F.sum(d).alias(f"d{i}") for i, d in enumerate(digest)])
+                .collect()
+            }
+            changed = [b for b in state if snap.get(b, _NO_DIGEST) != state[b]["digest"]]
+            metrics["dim_bands_rewritten"] = len(changed)
+            for b in changed:
+                state[b] = {"rows": None, "digest": snap.get(b, _NO_DIGEST)}
+            if changed:
+                _scd2_rewrite_bands(
+                    read_dim(), customer, keys, attrs, batch_ts, dim_path, state, changed
+                )
+            elif not committed:
+                _publish_marker(marker, "committed", bands=state)
+        metrics["dim_customer_rows"] = sum(e["rows"] for e in state.values())
+
+
+def _band_sums(band: Column, current: Column, d0: str, d1: str) -> list[Column]:
+    """Per band: the row total, and the digest sums over the rows where
+    `current` holds — as named aggregates for one Observation or select."""
+    out = []
+    for b in range(_N_DIM_BANDS):
+        at = band == b
+        out.append(F.count(F.when(at, 1)).alias(f"rows{b}"))
+        for d in (d0, d1):
+            out.append(F.sum(F.when(at & current, F.col(d))).alias(f"{d}_{b}"))
+    return out
+
+
+def _band_state(sums) -> dict[int, dict]:
+    """`_band_sums`' values (a dict or Row) as the marker's band entries."""
+    return {
+        b: {"rows": sums[f"rows{b}"],
+            "digest": [str(sums[f"_d0_{b}"] or 0), str(sums[f"_d1_{b}"] or 0)]}
+        for b in range(_N_DIM_BANDS)
+    }
+
+
+def _band_state_from_rows(dim: DataFrame, digest) -> dict[int, dict]:
+    """Rebuild the marker's band entries from the dimension itself, in one
+    aggregate: each band's row total and the digest of its current rows
+    (which equal the last applied snapshot slice, save keys that left)."""
+    row = dim.select(
+        "_band", "is_current", *[d.alias(f"_d{i}") for i, d in enumerate(digest)]
+    ).agg(*_band_sums(F.col("_band"), F.col("is_current"), "_d0", "_d1")).first()
+    return _band_state(row)
+
+
+def _raw_events(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The night's raw `events.parquet`, with `table()`'s conversion of a
+    legacy TIMESTAMP(NANOS) `ts`; not `table()`'s re-split copy, which
+    would copy every night's source into the index cache."""
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    df = spark.read.parquet(f"{sf_dir}/events.parquet")
+    if dict(df.dtypes).get("ts") == "bigint":
+        df = df.withColumn(
+            "ts", F.expr("cast(timestamp_micros(ts div 1000) as timestamp_ntz)")
+        )
+    return df
+
+
+def _move_files(src: str, dst: str) -> None:
+    """Rename every data file of the parquet dir `src` flat into `dst`
+    (Spark's part names are unique per write job). Bookkeeping files
+    (`_SUCCESS`, `.crc`) stay behind."""
+    for name in sorted(os.listdir(src)):
+        if not name.startswith(("_", ".")):
+            os.rename(os.path.join(src, name), os.path.join(dst, name))
 
 
 def _events_flow(spark: SparkSession, sf_dir: str, target_dir: str, metrics: dict) -> None:
-    """events → full load on the first run, watermark increment after."""
+    """events → full load on the first run, an append of the fresh rows
+    after that. The fresh rows are the source rows above the marker's
+    watermark whose ids are not loaded yet; they are written to a tmp dir
+    and renamed flat into `events/`, between a `pending` and a
+    `committed` marker. A torn append (pending marker, tmp dir left) is
+    rolled forward; a tmp dir without a pending marker never started its
+    renames and is dropped. Without a committed marker, the watermark and
+    the row total come from one aggregate over the loaded events."""
     with _stage("load_events_incremental", metrics):
-        events = table(spark, sf_dir, "events")
+        events = _raw_events(spark, sf_dir)
         ev_path = f"{target_dir}/events"
-        # a crash inside the last night's swap must not read as a first run:
-        # that would reload the source alone and drop the loaded history
+        marker = os.path.join(ev_path, _EVENTS_STATE)
+        tmp = ev_path + ".tmp-append"
+        # older code swapped the whole table through `events.old`: a crash
+        # inside that swap must not read as a first run, which would reload
+        # the source alone and drop the loaded history
         recover_swap(ev_path)
-        if os.path.exists(ev_path):
-            loaded = spark.read.parquet(ev_path)
-            merged, rows = _observe_rows(
-                incr_load_watermark(loaded, events, ts_col="ts", id_col="event_id")
-            )
-            _overwrite_in_place(merged, ev_path)
+        if os.path.isdir(tmp):
+            if _marker(marker).get("state") == "pending":
+                _move_files(tmp, ev_path)
+            shutil.rmtree(tmp)
+        stats = [F.count(F.lit(1)).alias("rows"), F.max("ts").alias("wm")]
+        if not os.path.exists(ev_path):
+            seen = Observation()
+            events.observe(seen, *stats).write.mode("overwrite").parquet(ev_path)
+            rows, wm = seen.get["rows"], seen.get["wm"]
         else:
-            first, rows = _observe_rows(events)
-            first.write.mode("overwrite").parquet(ev_path)
-        metrics["events_rows"] = rows.get["rows"]
+            loaded = spark.read.schema(events.schema).parquet(ev_path)
+            st = _marker(marker)
+            if st.get("state") == "committed":
+                rows, wm = st["rows"], st["watermark"]
+            else:
+                got = loaded.agg(*stats).first()
+                rows, wm = got["rows"], got["wm"]
+            above = (
+                F.lit(True) if wm is None  # no events loaded yet
+                else F.col("ts") > F.lit(str(wm)).cast(dict(events.dtypes)["ts"])
+            )
+            seen = Observation()
+            incr_fresh_rows(loaded, events, above, "event_id").observe(
+                seen, *stats
+            ).write.mode("overwrite").parquet(tmp)
+            rows += seen.get["rows"]
+            wm = seen.get["wm"] or wm
+            _publish_marker(marker, "pending")
+            _move_files(tmp, ev_path)
+        _publish_marker(
+            marker, "committed", rows=rows, watermark=None if wm is None else str(wm)
+        )
+        shutil.rmtree(tmp, ignore_errors=True)
+        metrics["events_rows"] = rows

@@ -31,9 +31,18 @@ registered `stream_scd2_sink` query IS that one-pass formulation
 hash-checks the semantics in batch while tests/test_streaming.py proves
 the streaming path (crash + restart included) converges to the same rows.
 
-A day SPLIT ACROSS micro-batches still converges to the spec. Every
-applied batch is first appended to the bronze event log (`<dim>.log/`), and
-the marker records the folded head day (`last_day`). When a batch's
+The log write is the batch's only materialization. Every applied batch
+is first written to the bronze event log (`<dim>.log/`) as an underscore
+tmp dir, and its sorted distinct event days are observed on that write
+(no separate aggregate, no persist). The day checks (pre-sidecar marker,
+late days under late_policy="fail", a head-day re-fold without a full
+log) run on those days before the rename: a refused batch deletes its
+tmp dir and leaves the log unchanged. The fold and the late reconcile
+then read the batch back from its log dir. A re-delivered batch whose
+log dir already exists reads its days from that dir.
+
+A day SPLIT ACROSS micro-batches still converges to the spec. The marker
+records the folded head day (`last_day`). When a batch's
 earliest fresh day is the head day, the fold reads the head day back from
 the log (its slice ts >= head holds every earlier row of that day and this
 batch's rows), rolls the head day back (drop its versions, reopen rows
@@ -62,7 +71,7 @@ import json
 import os
 import shutil
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 from ..operators.etl import _FAR_FUTURE
@@ -89,6 +98,17 @@ def _read_state(dim_path: str) -> dict | None:
             f"marker ({marker}: {e}); refusing to fold into a table this "
             "sink did not publish"
         ) from e
+
+
+def write_state(path: str, state: dict) -> None:
+    """Write a JSON state marker whole: to an underscore tmp file beside
+    it, then `os.replace` over `path`, so a reader sees the old marker or
+    the new one, never a torn file. Every state marker — the sinks' and
+    pipeline.py's — is written here."""
+    tmp = os.path.join(os.path.dirname(path), "_tmp" + os.path.basename(path))
+    with open(tmp, "w") as f:
+        json.dump(state, f)
+    os.replace(tmp, path)
 
 
 def swap_in(tmp: str, path: str) -> None:
@@ -118,14 +138,12 @@ recover_dim = recover_swap  # the sinks' name for it
 
 def atomic_swap_publish(df: DataFrame, dim_path: str, state: dict) -> None:
     """Write `df` and the state marker to a temp dir, then swap it live
-    with `swap_in` (same discipline as pipeline._overwrite_in_place). The
-    marker travels INSIDE the published dir, so the table and the batch_id
-    that produced it are one atomic unit."""
+    with `swap_in`. The marker travels INSIDE the published dir, so the
+    table and the batch_id that produced it are one atomic unit."""
     tmp = dim_path + ".tmp-swap"
     shutil.rmtree(tmp, ignore_errors=True)
     df.write.mode("overwrite").parquet(tmp)
-    with open(os.path.join(tmp, _STATE_FILE), "w") as f:
-        json.dump(state, f)
+    write_state(os.path.join(tmp, _STATE_FILE), state)
     swap_in(tmp, dim_path)
 
 
@@ -218,22 +236,39 @@ def _compact_log(spark, dim_path: str, upto: int) -> None:
 
 
 def _append_batch_log(batch_df: DataFrame, dim_path: str, batch_id: int,
-                      cols: list[str]) -> None:
+                      cols: list[str], ts_col: str = "ts", admit=lambda days: days):
     """Idempotently append one micro-batch to the bronze event-log sidecar
-    (`<dim>.log/batch=<id>/`). The log lives OUTSIDE the swapped dimension
-    dir so appends are O(batch), never O(history). Per-batch subdirs
-    publish with tmp+rename: a re-delivered or crash-retried batch finds
-    its subdir already present and skips (deterministic content, so either
-    writer's output is correct); a stranded tmp is underscore-prefixed and
-    thus invisible to Spark's reader."""
-    dst = os.path.join(dim_path + _LOG_SUFFIX, f"batch={batch_id}")
+    (`<dim>.log/batch=<id>/`), and return `admit` of its sorted distinct
+    event days. The log lives OUTSIDE the swapped dimension dir so appends
+    are O(batch), never O(history). The batch is written to an underscore
+    tmp dir (invisible to Spark's reader) with its days observed on that
+    write, so reading them costs no job of its own. `admit(days)` then
+    decides on the batch: when it raises, the tmp dir is deleted and the
+    log is unchanged; otherwise the tmp dir is renamed into place. A batch
+    with no rows is not logged. A re-delivered or crash-retried batch
+    finds its dir already present (deterministic content, so either
+    writer's output is correct) and reads its days back from it."""
+    log_dir = dim_path + _LOG_SUFFIX
+    dst = os.path.join(log_dir, f"batch={batch_id}")
+    days = F.sort_array(F.collect_set(F.date_trunc("day", F.col(ts_col)))).alias("days")
     if os.path.exists(dst):
-        return
-    os.makedirs(dim_path + _LOG_SUFFIX, exist_ok=True)
-    tmp = os.path.join(dim_path + _LOG_SUFFIX, f"_tmpbatch.{batch_id}")
+        return admit(batch_df.sparkSession.read.parquet(dst).agg(days).first()["days"])
+    os.makedirs(log_dir, exist_ok=True)
+    tmp = os.path.join(log_dir, f"_tmpbatch.{batch_id}")
     shutil.rmtree(tmp, ignore_errors=True)
-    batch_df.select(*cols).write.mode("overwrite").parquet(tmp)
-    os.rename(tmp, dst)
+    seen = Observation()
+    batch_df.select(*cols).observe(seen, days).write.mode("overwrite").parquet(tmp)
+    got = seen.get["days"]
+    try:
+        verdict = admit(got)
+    except BaseException:
+        shutil.rmtree(tmp, ignore_errors=True)
+        raise
+    if got:
+        os.rename(tmp, dst)
+    else:
+        shutil.rmtree(tmp, ignore_errors=True)
+    return verdict
 
 
 def scd2_stream_sink(dim_path, keys, attrs, ts_col="ts", tiebreak="event_id",
@@ -244,9 +279,13 @@ def scd2_stream_sink(dim_path, keys, attrs, ts_col="ts", tiebreak="event_id",
 
     Every applied batch also appends to the bronze event-log sidecar
     (`<dim>.log/`), so the dimension can always be audited or rebuilt from
-    raw history. `late_policy` governs event-time DAY regression (a batch
-    whose earliest day precedes the folded head — the fold's watermark
-    assumption broken):
+    raw history; the batch's days are observed on that append, and the
+    fold reads the batch from its log dir. `fold.phase_sec` times the
+    phases: `log_append` (the log write with its observed days, the checks
+    and the rename), `days_collect` (the checks on the days alone),
+    `log_compact`, `fold`, `reconcile` and `publish`. `late_policy`
+    governs event-time DAY regression (a batch whose earliest day precedes
+    the folded head — the fold's watermark assumption broken):
 
     - "fail" (default): raise, as before — the operator decides.
     - "reconcile": route the late rows through a BOUNDED re-fold — the
@@ -271,13 +310,7 @@ def scd2_stream_sink(dim_path, keys, attrs, ts_col="ts", tiebreak="event_id",
         if st is not None and batch_id <= st["batch_id"]:
             fold.skipped.append(batch_id)  # re-delivered: already published
             return
-        # the days collect, the log append and the publish write each read
-        # the batch: materialize it once, and release it on every exit
-        batch_df.persist()
-        try:
-            _apply(batch_df, batch_id, st)
-        finally:
-            batch_df.unpersist()
+        _apply(batch_df, batch_id, st)
 
     def _apply(batch_df: DataFrame, batch_id: int, st: dict | None) -> None:
         import time as _time
@@ -287,67 +320,76 @@ def scd2_stream_sink(dim_path, keys, attrs, ts_col="ts", tiebreak="event_id",
             fold.phase_sec[phase] = fold.phase_sec.get(phase, 0.0) + (t1 - t0)
             return t1
 
-        _t = _time.perf_counter()
         spark = batch_df.sparkSession
         day = F.date_trunc("day", F.col(ts_col))
-        all_days = (
-            batch_df.agg(
-                F.sort_array(F.collect_set(day)).alias("ds")
-            ).collect()[0]["ds"]
-        )  # bounded: distinct event-days inside ONE micro-batch, one
-        # map-side-combined aggregate (a distinct+orderBy was a second stage)
-        _t = _mark("days_collect", _t)
-        if not all_days:
-            return
         last_day = st.get("last_day") if st is not None else None
-        if st is not None and last_day is None:
-            # Pre-sidecar publisher state (marker without 'last_day'): the
-            # folded head is UNKNOWABLE from the published dimension — a
-            # head day whose snapshot matched the previous state folds as
-            # a no-op and leaves no trace in effective_from, so
-            # max(effective_from) is only a LOWER bound on the true head
-            # and any derived ordering check could let a repeated/split
-            # day silently double-fold. The only sound behavior is to fail
-            # loudly and route to an explicit rebuild.
-            raise ValueError(
-                f"scd2 stream sink: dimension at {dim_path} was published "
-                "by a pre-sidecar sink (state marker has no 'last_day'), "
-                "so the folded head cannot be determined and in-order "
-                "folding cannot be verified; rebuild the dimension via "
-                "scd2_rebuild_from_log (or re-publish it with this sink) "
-                "before resuming the stream"
-            )
-        late_days = (
-            [d for d in all_days if str(d) < last_day] if last_day is not None else []
-        )
-        if late_days and late_policy == "fail":
-            # event-time regression across micro-batches: the day-ordered
-            # fold contract is non-decreasing days (the watermark
-            # assumption). Late days need scd2_rebuild_from_log or
-            # late_policy="reconcile" — fail loudly rather than silently
-            # mis-folding.
-            raise ValueError(
-                f"scd2 stream sink: batch {batch_id} contains day "
-                f"{all_days[0]} older than the folded head {last_day}"
-            )
-        days = [d for d in all_days if d not in late_days]
-        refold_head = bool(days) and str(days[0]) == last_day
-        if (late_days or refold_head) and not st.get("has_log"):
-            # late days and a split head day both re-read folded days
-            # from the bronze log, which must hold them all
-            raise ValueError(
-                f"scd2 stream sink: batch {batch_id} re-folds days the "
-                "dimension already holds, but the dimension predates the "
-                "bronze event log (no 'has_log' in its state marker) — "
-                "cannot refold them; rebuild via scd2_rebuild_from_log"
-            )
+
+        def admit(all_days: list) -> tuple | None:
+            # runs on the batch's event days, observed on its log write,
+            # before the write is renamed into the log: a refused batch
+            # never enters the log. Returns (late days, fresh days,
+            # head-day re-fold), or None for a batch with no event-days.
+            t0 = _time.perf_counter()
+            if not all_days:
+                return None
+            if st is not None and last_day is None:
+                # Pre-sidecar publisher state (marker without 'last_day'):
+                # the folded head is UNKNOWABLE from the published
+                # dimension — a head day whose snapshot matched the
+                # previous state folds as a no-op and leaves no trace in
+                # effective_from, so max(effective_from) is only a LOWER
+                # bound on the true head and any derived ordering check
+                # could let a repeated/split day silently double-fold. The
+                # only sound behavior is to fail loudly and route to an
+                # explicit rebuild.
+                raise ValueError(
+                    f"scd2 stream sink: dimension at {dim_path} was published "
+                    "by a pre-sidecar sink (state marker has no 'last_day'), "
+                    "so the folded head cannot be determined and in-order "
+                    "folding cannot be verified; rebuild the dimension via "
+                    "scd2_rebuild_from_log (or re-publish it with this sink) "
+                    "before resuming the stream"
+                )
+            late = [d for d in all_days if str(d) < last_day] if last_day is not None else []
+            if late and late_policy == "fail":
+                # event-time regression across micro-batches: the
+                # day-ordered fold contract is non-decreasing days (the
+                # watermark assumption). Late days need
+                # scd2_rebuild_from_log or late_policy="reconcile" — fail
+                # loudly rather than silently mis-folding.
+                raise ValueError(
+                    f"scd2 stream sink: batch {batch_id} contains day "
+                    f"{all_days[0]} older than the folded head {last_day}"
+                )
+            fresh = [d for d in all_days if d not in late]
+            refold = bool(fresh) and str(fresh[0]) == last_day
+            if (late or refold) and not st.get("has_log"):
+                # late days and a split head day both re-read folded days
+                # from the bronze log, which must hold them all
+                raise ValueError(
+                    f"scd2 stream sink: batch {batch_id} re-folds days the "
+                    "dimension already holds, but the dimension predates the "
+                    "bronze event log (no 'has_log' in its state marker) — "
+                    "cannot refold them; rebuild via scd2_rebuild_from_log"
+                )
+            _mark("days_collect", t0)
+            return late, fresh, refold
+
         log_cols = [*keys, *attrs, ts_col, tiebreak]
-        _append_batch_log(batch_df, dim_path, batch_id, log_cols)
+        _t = _time.perf_counter()
+        plan = _append_batch_log(batch_df, dim_path, batch_id, log_cols, ts_col, admit)
         _t = _mark("log_append", _t)
+        if plan is None:
+            return  # no event-days: nothing to fold
+        late_days, days, refold_head = plan
         # keep the bronze log at O(log batches) dirs (and heal any torn
-        # merge) BEFORE the fold reads it below
+        # merge) BEFORE the fold reads it below; the batch's own dir is
+        # newer than the published batch_id, so it is never merged here
         _compact_log(spark, dim_path, st["batch_id"] if st is not None else -1)
         _t = _mark("log_compact", _t)
+        batch_rows = spark.read.schema(batch_df.select(*log_cols).schema).parquet(
+            os.path.join(dim_path + _LOG_SUFFIX, f"batch={batch_id}")
+        )  # the log write's own schema: no schema-inference job
         ts_t = dict(batch_df.dtypes)[ts_col]
         tb_t = dict(batch_df.dtypes)[tiebreak]
 
@@ -411,7 +453,7 @@ def scd2_stream_sink(dim_path, keys, attrs, ts_col="ts", tiebreak="event_id",
                     ).otherwise(F.col("effective_to")),
                 )
             else:
-                rows = batch_df.select(*log_cols)
+                rows = batch_rows
                 if late_days:
                     rows = rows.filter(~day.isin(late_days))
             hist = None
@@ -448,7 +490,7 @@ def scd2_stream_sink(dim_path, keys, attrs, ts_col="ts", tiebreak="event_id",
                 # window plan once instead of re-executing it per consumer
                 target = target.localCheckpoint()
             affected = (
-                batch_df.filter(day.isin(late_days)).select(*keys).distinct()
+                batch_rows.filter(day.isin(late_days)).select(*keys).distinct()
             )
             d0 = str(min(late_days))
             seeds = _as_events(

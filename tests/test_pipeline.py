@@ -363,7 +363,9 @@ def test_observed_counts_equal_on_disk_counts(spark, sf_dir, target_dir, tmp_pat
             sc.setLocalProperty("spark.jobGroup.id", None)
             sc.setLocalProperty("spark.job.description", None)
         sc._jsc.sc().listenerBus().waitUntilEmpty()
-        assert set(tracker.getJobIdsForGroup(None)) == ungrouped
+        # no new ungrouped job; the status store keeps only the last
+        # spark.ui.retainedJobs jobs, so older ungrouped ids may be evicted
+        assert set(tracker.getJobIdsForGroup(None)) - ungrouped == set()
         assert m["fact_rows"] == spark.read.parquet(f"{target_dir}/fact_lineitem").count()
         assert m["events_rows"] == spark.read.parquet(f"{target_dir}/events").count()
         assert m["dim_customer_rows"] == spark.read.parquet(
