@@ -34,25 +34,27 @@ markers; both start with `_`, which Spark's and pyarrow's readers skip.
              digest of the snapshot slice last applied (the sums of two
              64-bit hashes of each row's `row_encoding`). A night runs one
              aggregate over the snapshot by band; the bands whose digest
-             differs are folded and swapped in, and their new totals are
+             differs are folded and published, and their new totals are
              observed on the band write.
   events/_events_state.json  the watermark and the row total. A night
-             writes its fresh rows to `events.tmp-append/` and renames the
-             files flat into `events/`.
+             writes only its fresh rows, and their part files are
+             published flat into `events/`.
 
-Crash windows. Each marker is written whole (`write_state`), as `pending`
-before the first rename of a night and as `committed` after the last;
-only a committed marker is trusted. A band swap torn between its renames
-is healed by `recover_band_swaps`, which also downgrades the marker to
-pending. A pending, absent or unreadable marker is rebuilt with one
-aggregate over the table (the dimension's bands, the loaded events), and
-the run then takes its usual path: re-applying a band's unchanged slice
-is a no-op, and the events anti-join on loaded ids adds no row twice. An
-events append torn part-way (pending marker, tmp dir still there) is
-rolled forward before the watermark is taken, so no fresh file is left
-below it; a tmp dir without a pending marker never began its renames and
-is dropped. The first run writes each marker once, after its table, from
-`Observation`s on the table's write.
+Crash windows. Both tables publish through `streaming/commit.py`'s one
+protocol: Spark writes only into the staging dir beside the table, the
+marker is written last into that dir as the commit record, and the staged
+entries (the first load's whole table, a night's `_band=N` dirs or events
+part files) are then moved over the table, the marker last. Each flow
+calls `recover` before it looks at its table: a staging dir that holds
+its marker is rolled forward, one without it (a torn write, a crash
+before the marker) is deleted, so a torn first load is loaded again and a
+torn night leaves the last committed night. Only a committed marker is
+trusted; an absent or unreadable one (or one in another state) is rebuilt
+with one aggregate over the table (the dimension's bands, the loaded
+events), and the run then takes its usual path: re-applying a band's
+unchanged slice is a no-op, and the events anti-join on loaded ids adds
+no row twice. The first run takes each marker from `Observation`s on the
+table's write.
 
 Audit: structured metrics (row counts per flow, rejects per rule, stage
 durations) via std-lib logging and the returned dict. The counts come from
@@ -80,7 +82,6 @@ import json
 import logging
 import operator
 import os
-import shutil
 import time
 from contextlib import contextmanager
 from functools import reduce
@@ -96,8 +97,8 @@ from .operators.etl import (
     scd2_apply,
     scd2_init,
 )
-from .streaming.scd2_sink import recover_swap, write_state
 from .sources.tables import table
+from .streaming.commit import publish, recover, staging
 
 log = logging.getLogger("t20spark.pipeline")
 
@@ -137,11 +138,7 @@ def _marker(path: str) -> dict:
     return st if isinstance(st, dict) else {}
 
 
-def _publish_marker(path: str, state: str, **fields) -> None:
-    write_state(path, {"state": state, **fields})
-
-
-def _scd2_rewrite_bands(
+def _stage_changed_bands(
     target: DataFrame,
     staged: DataFrame,
     keys,
@@ -151,14 +148,13 @@ def _scd2_rewrite_bands(
     state: dict[int, dict],
     changed: list[int],
 ) -> None:
-    """Fold ONLY the changed bands through scd2_apply and swap exactly
-    those partition directories (write-to-temp + rename per band).
-    Untouched band files are never opened, rewritten, or re-timestamped —
-    the nightly dimension rewrite is pruned to |changed bands| /
-    _N_DIM_BANDS of the dimension. `state` is the new marker's entry per
-    band; the changed bands' row totals are filled in from an Observation
-    on the band write. The marker goes `pending` before the first rename
-    and `committed` after the last."""
+    """Fold ONLY the changed bands through scd2_apply and write exactly
+    those partition dirs to the dimension's staging dir, for `publish` to
+    move over their live dirs. Untouched band files are never opened,
+    rewritten, or re-timestamped — the nightly dimension rewrite is pruned
+    to |changed bands| / _N_DIM_BANDS of the dimension. `state` is the new
+    marker's entry per band; the changed bands' row totals are filled in
+    from an Observation on the band write."""
     key = F.col(keys[0])
     tslice = target.filter(F.col("_band").isin(changed)).drop("_band")
     sslice = staged.filter(_dim_band(key).isin(changed))
@@ -168,62 +164,9 @@ def _scd2_rewrite_bands(
     folded = folded.observe(
         counts, *[F.count(F.when(F.col("_band") == b, 1)).alias(str(b)) for b in changed]
     )
-    tmp = dim_path + ".tmp-bands"
-    shutil.rmtree(tmp, ignore_errors=True)
-    folded.write.mode("overwrite").partitionBy("_band").parquet(tmp)
+    folded.write.mode("overwrite").partitionBy("_band").parquet(staging(dim_path))
     for b in changed:
         state[b]["rows"] = counts.get[str(b)]
-    marker = os.path.join(dim_path, _DIM_STATE)
-    _publish_marker(marker, "pending")
-    for b in changed:
-        src = os.path.join(tmp, f"_band={b}")
-        if not os.path.exists(src):  # defensive: changed band always has rows
-            continue
-        dst = os.path.join(dim_path, f"_band={b}")
-        # survivor name carries NO '=': Spark's partition discovery treats
-        # an underscore dir containing '=' as a data path, so '_band=3.old'
-        # would surface as a bogus string partition value; '_oldband.3'
-        # stays hidden even if a crash strands it
-        old = os.path.join(dim_path, f"_oldband.{b}")
-        shutil.rmtree(old, ignore_errors=True)
-        if os.path.exists(dst):
-            os.rename(dst, old)
-        os.rename(src, dst)
-        shutil.rmtree(old, ignore_errors=True)
-    _publish_marker(marker, "committed", bands=state)
-    shutil.rmtree(tmp, ignore_errors=True)
-
-
-def recover_band_swaps(dim_path: str) -> None:
-    """Heal the per-band swap crash windows before the dimension is read:
-    a stranded '_oldband.N' survivor is restored when its live band is
-    missing (crash between the two renames) and discarded when the live
-    band exists (crash before cleanup). Legacy '_band=N.old' survivors
-    from the pre-hidden naming are healed the same way. Idempotent; called
-    at the top of every nightly run. Healing a band downgrades the
-    dimension's marker to `pending`, so its per-band state is rebuilt from
-    the healed bands before it is trusted."""
-    if not os.path.isdir(dim_path):
-        return
-    healed = False
-    for name in os.listdir(dim_path):
-        band = None
-        if name.startswith("_oldband."):
-            band = name[len("_oldband."):]
-        elif name.startswith("_band=") and name.endswith(".old"):
-            band = name[len("_band="):-len(".old")]
-        if band is None:
-            continue
-        old = os.path.join(dim_path, name)
-        live = os.path.join(dim_path, f"_band={band}")
-        if os.path.exists(live):
-            shutil.rmtree(old)
-        else:
-            os.rename(old, live)
-        healed = True
-    marker = os.path.join(dim_path, _DIM_STATE)
-    if healed and os.path.exists(marker):
-        _publish_marker(marker, "pending")
 
 
 @contextmanager
@@ -338,9 +281,7 @@ def _dimension_flow(
         customer = table(spark, sf_dir, "customer")
         keys, attrs = ["c_custkey"], ["c_name", "c_nationkey", "c_acctbal", "c_mktsegment"]
         dim_path = f"{target_dir}/dim_customer"
-        marker = os.path.join(dim_path, _DIM_STATE)
-        recover_band_swaps(dim_path)  # heal any torn swap from a crashed run
-        shutil.rmtree(dim_path + ".tmp-bands", ignore_errors=True)
+        recover(dim_path, _DIM_STATE)  # finish or drop a crashed run's publish
         band = _dim_band(F.col(keys[0]))
         digest = _digest_terms([*keys, *attrs])
         dim0 = scd2_init(customer, batch_ts="1970-01-01 00:00:00").withColumn("_band", band)
@@ -351,17 +292,19 @@ def _dimension_flow(
             seen = Observation()
             dim0.select("*", *[d.alias(f"_d{i}") for i, d in enumerate(digest)]).observe(
                 seen, *_band_sums(F.col("_band"), F.lit(True), "_d0", "_d1")
-            ).drop("_d0", "_d1").write.mode("overwrite").partitionBy("_band").parquet(dim_path)
+            ).drop("_d0", "_d1").write.mode("overwrite").partitionBy("_band").parquet(
+                staging(dim_path)
+            )
             state = _band_state(seen.get)
-            _publish_marker(marker, "committed", bands=state)
             metrics["dim_bands_rewritten"] = _N_DIM_BANDS
+            dirty = True
         else:
             # nightly run: fold + rewrite ONLY bands whose slice changed
             def read_dim() -> DataFrame:
                 # the dimension's schema is known: no schema-inference job
                 return spark.read.schema(dim0.schema).parquet(dim_path)
 
-            st = _marker(marker)
+            st = _marker(os.path.join(dim_path, _DIM_STATE))
             committed = st.get("state") == "committed"
             state = (
                 {int(b): e for b, e in st["bands"].items()}
@@ -379,11 +322,12 @@ def _dimension_flow(
             for b in changed:
                 state[b] = {"rows": None, "digest": snap.get(b, _NO_DIGEST)}
             if changed:
-                _scd2_rewrite_bands(
+                _stage_changed_bands(
                     read_dim(), customer, keys, attrs, batch_ts, dim_path, state, changed
                 )
-            elif not committed:
-                _publish_marker(marker, "committed", bands=state)
+            dirty = bool(changed) or not committed
+        if dirty:
+            publish(dim_path, _DIM_STATE, {"state": "committed", "bands": state})
         metrics["dim_customer_rows"] = sum(e["rows"] for e in state.values())
 
 
@@ -431,45 +375,25 @@ def _raw_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     return df
 
 
-def _move_files(src: str, dst: str) -> None:
-    """Rename every data file of the parquet dir `src` flat into `dst`
-    (Spark's part names are unique per write job). Bookkeeping files
-    (`_SUCCESS`, `.crc`) stay behind."""
-    for name in sorted(os.listdir(src)):
-        if not name.startswith(("_", ".")):
-            os.rename(os.path.join(src, name), os.path.join(dst, name))
-
-
 def _events_flow(spark: SparkSession, sf_dir: str, target_dir: str, metrics: dict) -> None:
     """events → full load on the first run, an append of the fresh rows
     after that. The fresh rows are the source rows above the marker's
-    watermark whose ids are not loaded yet; they are written to a tmp dir
-    and renamed flat into `events/`, between a `pending` and a
-    `committed` marker. A torn append (pending marker, tmp dir left) is
-    rolled forward; a tmp dir without a pending marker never started its
-    renames and is dropped. Without a committed marker, the watermark and
-    the row total come from one aggregate over the loaded events."""
+    watermark whose ids are not loaded yet; their part files are published
+    flat into `events/`. Without a committed marker, the watermark and the
+    row total come from one aggregate over the loaded events."""
     with _stage("load_events_incremental", metrics):
         events = _raw_events(spark, sf_dir)
         ev_path = f"{target_dir}/events"
-        marker = os.path.join(ev_path, _EVENTS_STATE)
-        tmp = ev_path + ".tmp-append"
-        # older code swapped the whole table through `events.old`: a crash
-        # inside that swap must not read as a first run, which would reload
-        # the source alone and drop the loaded history
-        recover_swap(ev_path)
-        if os.path.isdir(tmp):
-            if _marker(marker).get("state") == "pending":
-                _move_files(tmp, ev_path)
-            shutil.rmtree(tmp)
+        # a torn first load must read as no load, never as loaded history
+        recover(ev_path, _EVENTS_STATE)
         stats = [F.count(F.lit(1)).alias("rows"), F.max("ts").alias("wm")]
+        seen = Observation()
         if not os.path.exists(ev_path):
-            seen = Observation()
-            events.observe(seen, *stats).write.mode("overwrite").parquet(ev_path)
+            events.observe(seen, *stats).write.mode("overwrite").parquet(staging(ev_path))
             rows, wm = seen.get["rows"], seen.get["wm"]
         else:
             loaded = spark.read.schema(events.schema).parquet(ev_path)
-            st = _marker(marker)
+            st = _marker(os.path.join(ev_path, _EVENTS_STATE))
             if st.get("state") == "committed":
                 rows, wm = st["rows"], st["watermark"]
             else:
@@ -479,16 +403,12 @@ def _events_flow(spark: SparkSession, sf_dir: str, target_dir: str, metrics: dic
                 F.lit(True) if wm is None  # no events loaded yet
                 else F.col("ts") > F.lit(str(wm)).cast(dict(events.dtypes)["ts"])
             )
-            seen = Observation()
             incr_fresh_rows(loaded, events, above, "event_id").observe(
                 seen, *stats
-            ).write.mode("overwrite").parquet(tmp)
+            ).write.mode("overwrite").parquet(staging(ev_path))
             rows += seen.get["rows"]
             wm = seen.get["wm"] or wm
-            _publish_marker(marker, "pending")
-            _move_files(tmp, ev_path)
-        _publish_marker(
-            marker, "committed", rows=rows, watermark=None if wm is None else str(wm)
-        )
-        shutil.rmtree(tmp, ignore_errors=True)
+        publish(ev_path, _EVENTS_STATE, {
+            "state": "committed", "rows": rows, "watermark": None if wm is None else str(wm)
+        })
         metrics["events_rows"] = rows

@@ -6,9 +6,10 @@ last-op-wins, with tombstones retained so out-of-order batches can never
 resurrect a deleted key.
 
 Exactly-once reuses the SCD2 sink's building blocks unchanged
-(streaming/scd2_sink.py): the state marker travels inside the published
-dir through `atomic_swap_publish`, re-delivered batch_ids are skipped, and
-`recover_dim` heals the two-rename crash window. Unlike the SCD2 day-fold,
+(streaming/scd2_sink.py): `atomic_swap_publish` commits the state table
+with its marker through the one commit protocol (streaming/commit.py),
+`recover_dim` finishes or drops a crashed publish before each fold, and
+re-delivered batch_ids are skipped. Unlike the SCD2 day-fold,
 CDC compaction has NO ordering constraint across batches: the fold is a
 pure per-key argmax on (ts, tiebreak), which is associative and
 commutative — any batch arrival order converges to the same state, so

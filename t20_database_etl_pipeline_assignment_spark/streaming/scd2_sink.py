@@ -3,19 +3,22 @@
 SCD Type 2) exercised END-TO-END under Structured Streaming: an event
 stream drains through `foreachBatch`, and every micro-batch folds into a
 parquet SCD2 dimension with a one-pass seeded day-fold (equivalent to the
-batch `scd2_apply` kernel applied day by day — see Determinism below) and
-an atomic two-rename swap.
+batch `scd2_apply` kernel applied day by day — see Determinism below),
+published through the one commit protocol of streaming/commit.py.
 
 Exactly-once across restarts, from two at-least-once building blocks:
   - foreachBatch re-delivers a micro-batch (same batch_id) whenever the
     sink ran but the checkpoint offset didn't commit (crash between them);
-  - the swap publishes the folded dimension together with a
-    `_scd2_sink_state.json` marker carrying the batch_id, in ONE rename.
-  On re-delivery the fold reads the marker and skips any batch_id it has
-  already published — so every micro-batch folds exactly once no matter
-  where the crash landed. (The marker file starts with `_`, which Spark's
-  parquet reader ignores.) A crash between the two renames leaves the
-  dimension as a recoverable `.old`, restored on the next fold.
+  - the publish (streaming/commit.py) writes the folded dimension to a
+    staging dir beside it, then a `_scd2_sink_state.json` marker carrying
+    the batch_id into that same dir as its commit record, then moves the
+    dir over the old dimension; the table and the batch_id that produced
+    it are one commit.
+  On re-delivery the fold first rolls a committed staging dir forward (or
+  drops one without its marker: that publish never happened), then reads
+  the marker and skips any batch_id it has already published — so every
+  micro-batch folds exactly once no matter where the crash landed. (The
+  marker file starts with `_`, which Spark's parquet reader ignores.)
 
 Determinism: each micro-batch folds ALL its event-days in ONE pass —
 per-(key, day) latest snapshots, seeded with each batch key's published
@@ -77,6 +80,7 @@ from pyspark.sql import functions as F
 from ..operators.etl import _FAR_FUTURE
 from ..registry import query
 from ..sources.tables import table
+from .commit import publish, recover, staging
 
 _STATE_FILE = "_scd2_sink_state.json"
 
@@ -100,54 +104,23 @@ def _read_state(dim_path: str) -> dict | None:
         ) from e
 
 
-def write_state(path: str, state: dict) -> None:
-    """Write a JSON state marker whole: to an underscore tmp file beside
-    it, then `os.replace` over `path`, so a reader sees the old marker or
-    the new one, never a torn file. Every state marker — the sinks' and
-    pipeline.py's — is written here."""
-    tmp = os.path.join(os.path.dirname(path), "_tmp" + os.path.basename(path))
-    with open(tmp, "w") as f:
-        json.dump(state, f)
-    os.replace(tmp, path)
-
-
-def swap_in(tmp: str, path: str) -> None:
-    """Publish the fully written dir `tmp` as `path` with two renames.
-    Readers never observe a partial state; a crash between the renames
-    leaves `path` missing and the previous version at `path.old`, which
-    `recover_swap` restores."""
-    old = path + ".old"
-    shutil.rmtree(old, ignore_errors=True)
-    if os.path.exists(path):
-        os.rename(path, old)
-    os.rename(tmp, path)
-    shutil.rmtree(old, ignore_errors=True)
-
-
-def recover_swap(path: str) -> None:
-    """Heal the crash window between `swap_in`'s two renames: if the live
-    dir is missing but its `.old` survivor exists, restore it. Call before
-    anything tests whether `path` exists."""
-    old = path + ".old"
-    if not os.path.exists(path) and os.path.exists(old):
-        os.rename(old, path)
-
-
-recover_dim = recover_swap  # the sinks' name for it
+def recover_dim(dim_path: str) -> None:
+    """Finish or drop a crashed publish of the sink table at `dim_path`
+    (`commit.recover`: a staging dir with its marker is rolled forward,
+    one without it deleted). Call before anything reads the table."""
+    recover(dim_path, _STATE_FILE, whole=True)
 
 
 def atomic_swap_publish(df: DataFrame, dim_path: str, state: dict) -> None:
-    """Write `df` and the state marker to a temp dir, then swap it live
-    with `swap_in`. The marker travels INSIDE the published dir, so the
-    table and the batch_id that produced it are one atomic unit."""
-    tmp = dim_path + ".tmp-swap"
-    shutil.rmtree(tmp, ignore_errors=True)
-    df.write.mode("overwrite").parquet(tmp)
-    write_state(os.path.join(tmp, _STATE_FILE), state)
-    swap_in(tmp, dim_path)
+    """Publish `df` as the whole table at `dim_path`, with the state
+    marker as the commit record (`commit.publish`). The marker travels
+    INSIDE the published dir, so the table and the batch_id that produced
+    it are one atomic unit."""
+    df.write.mode("overwrite").parquet(staging(dim_path))
+    publish(dim_path, _STATE_FILE, state, whole=True)
 
 
-_LOG_SUFFIX = ".log"  # bronze event-log sidecar, OUTSIDE the swapped dir
+_LOG_SUFFIX = ".log"  # bronze event-log sidecar, OUTSIDE the published dir
 _COMPACT_TARGET_BYTES = 128 * 1024 * 1024  # merged-file sizing, not a knob
 
 
@@ -239,7 +212,7 @@ def _append_batch_log(batch_df: DataFrame, dim_path: str, batch_id: int,
                       cols: list[str], ts_col: str = "ts", admit=lambda days: days):
     """Idempotently append one micro-batch to the bronze event-log sidecar
     (`<dim>.log/batch=<id>/`), and return `admit` of its sorted distinct
-    event days. The log lives OUTSIDE the swapped dimension dir so appends
+    event days. The log lives OUTSIDE the published dimension dir so appends
     are O(batch), never O(history). The batch is written to an underscore
     tmp dir (invisible to Spark's reader) with its days observed on that
     write, so reading them costs no job of its own. `admit(days)` then
@@ -505,9 +478,8 @@ def scd2_stream_sink(dim_path, keys, attrs, ts_col="ts", tiebreak="event_id",
                 keys, attrs, ts_col, tiebreak,
             )
             # no localCheckpoint on the final relation: atomic_swap_publish
-            # writes it to the tmp dir BEFORE the renames, so every
-            # parquet read in its lineage resolves while the live dir
-            # still exists
+            # writes it to the staging dir BEFORE the live dir is removed,
+            # so every parquet read in its lineage resolves
             target = (
                 target.join(affected, on=list(keys), how="left_anti")
                 .unionByName(rebuilt.select(*target.columns))

@@ -144,152 +144,6 @@ def test_scd2_band_rewrite_is_partition_pruned(spark, sf_dir, target_dir, tmp_pa
     shutil.rmtree(src_dir, ignore_errors=True)
 
 
-def test_band_swap_recovery_both_crash_windows(spark, tmp_path):
-    """recover_band_swaps heals both torn states a crash can leave: a
-    stranded survivor with the live band missing (restore) and a survivor
-    next to a completed swap (discard). Partition discovery afterwards
-    sees exactly the original integer bands — no '3.old' string values,
-    no duplicated rows."""
-    import os
-    import shutil
-
-    from t20_database_etl_pipeline_assignment_spark.pipeline import (
-        recover_band_swaps,
-    )
-
-    dim = str(tmp_path / "dim")
-    df = spark.createDataFrame(
-        [(i, f"v{i}", i % 4) for i in range(20)], "k long, v string, _band int"
-    )
-    df.write.mode("overwrite").partitionBy("_band").parquet(dim)
-    baseline = sorted(
-        tuple(r) for r in spark.read.parquet(dim).select("k", "v", "_band").collect()
-    )
-
-    # crash window 1: band renamed away, replacement never arrived
-    os.rename(os.path.join(dim, "_band=1"), os.path.join(dim, "_oldband.1"))
-    # crash window 2 (legacy naming): swap completed but cleanup didn't run
-    shutil.copytree(os.path.join(dim, "_band=2"), os.path.join(dim, "_band=2.old"))
-
-    recover_band_swaps(dim)
-    assert not os.path.exists(os.path.join(dim, "_oldband.1"))
-    assert not os.path.exists(os.path.join(dim, "_band=2.old"))
-    got = sorted(
-        tuple(r) for r in spark.read.parquet(dim).select("k", "v", "_band").collect()
-    )
-    assert got == baseline
-
-
-# band-swap crash-state model: what a crash can leave behind per band
-_BAND_STATES = [
-    "intact",        # live only (no crash)
-    "old_only",      # crash between the two renames: survivor holds truth
-    "both",          # crash before cleanup: live is newer, survivor stale
-    "legacy_old",    # pre-hidden-naming survivor, live missing
-    "legacy_both",   # pre-hidden-naming survivor beside a live band
-]
-
-
-def _hyp():
-    from hypothesis import HealthCheck, example, given, settings
-    from hypothesis import strategies as st
-    return HealthCheck, example, given, settings, st
-
-
-HealthCheck, example, given, settings, st = _hyp()
-
-
-@settings(max_examples=25, deadline=None, suppress_health_check=list(HealthCheck))
-@given(states=st.lists(st.sampled_from(_BAND_STATES), min_size=1, max_size=6))
-@example(states=["old_only", "both", "legacy_old", "legacy_both", "intact"])
-def test_band_swap_recovery_heals_any_crash_combination(states):
-    """recover_band_swaps over EVERY per-band crash-state combination: after
-    recovery each band has exactly its live dir, holding the survivor's
-    content iff the live dir was missing (crash between renames) and the
-    newer live content otherwise; no survivor dirs remain; and a second
-    recovery is a no-op (idempotence)."""
-    import os
-    import tempfile
-
-    from t20_database_etl_pipeline_assignment_spark.pipeline import (
-        recover_band_swaps,
-    )
-
-    def mkband(root, name, content):
-        d = os.path.join(root, name)
-        os.makedirs(d)
-        with open(os.path.join(d, "data.txt"), "w") as f:
-            f.write(content)
-
-    with tempfile.TemporaryDirectory() as dim:
-        want: dict[int, str] = {}
-        for b, state in enumerate(states):
-            if state == "intact":
-                mkband(dim, f"_band={b}", "live")
-                want[b] = "live"
-            elif state == "old_only":
-                mkband(dim, f"_oldband.{b}", "old")
-                want[b] = "old"
-            elif state == "both":
-                mkband(dim, f"_band={b}", "live")
-                mkband(dim, f"_oldband.{b}", "old")
-                want[b] = "live"
-            elif state == "legacy_old":
-                mkband(dim, f"_band={b}.old", "old")
-                want[b] = "old"
-            else:  # legacy_both
-                mkband(dim, f"_band={b}", "live")
-                mkband(dim, f"_band={b}.old", "old")
-                want[b] = "live"
-
-        for _ in range(2):  # second pass proves idempotence
-            recover_band_swaps(dim)
-            listing = sorted(os.listdir(dim))
-            assert listing == [f"_band={b}" for b in sorted(want)], listing
-            for b, content in want.items():
-                with open(os.path.join(dim, f"_band={b}", "data.txt")) as f:
-                    assert f.read() == content, (b, states)
-
-
-def test_events_swap_crash_keeps_loaded_history(spark, sf_dir, target_dir, tmp_path):
-    """A crash between the events swap's two renames leaves `events/`
-    missing and the loaded history at `events.old`. The next run must
-    restore it before deciding between first load and increment: a fresh
-    load from the current source alone would drop every loaded event the
-    source no longer carries, and the run after would delete the `.old`."""
-    import glob
-    import os
-
-    import pyarrow.compute as pc
-    import pyarrow.parquet as pq
-
-    night1 = tmp_path / "night1"
-    night2 = tmp_path / "night2"
-    for d in (night1, night2):
-        d.mkdir()
-        for p in glob.glob(f"{sf_dir}/*.parquet"):
-            if not (d == night2 and p.endswith("/events.parquet")):
-                os.symlink(p, d / os.path.basename(p))
-    # night 2's source no longer carries the 100 lowest event ids
-    ev = pq.read_table(f"{sf_dir}/events.parquet")
-    cut = sorted(ev.column("event_id").to_pylist())[100]
-    pq.write_table(ev.filter(pc.greater_equal(ev["event_id"], cut)),
-                   night2 / "events.parquet")
-
-    run_etl(spark, str(night1), target_dir, batch_ts="2026-01-01 00:00:00")
-    ev_path = f"{target_dir}/events"
-    loaded = {r[0] for r in spark.read.parquet(ev_path).select("event_id").collect()}
-    assert len(loaded) == ev.num_rows
-
-    os.rename(ev_path, ev_path + ".old")  # crash between the two renames
-    m2 = run_etl(spark, str(night2), target_dir, batch_ts="2026-01-02 00:00:00")
-
-    after = {r[0] for r in spark.read.parquet(ev_path).select("event_id").collect()}
-    assert loaded <= after, f"{len(loaded - after)} loaded events lost"
-    assert m2["events_rows"] == len(after)
-    assert not os.path.exists(ev_path + ".old")
-
-
 def _night_inputs(sf_dir, night_dir):
     """A nightly increment of the fixtures in `night_dir`: three customers
     change balance, 25 lineitem rows break DQ rules (five with two reasons

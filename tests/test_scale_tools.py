@@ -122,6 +122,31 @@ def test_resume_fingerprint_covers_helpers_and_core(monkeypatch):
     assert fp1 != fp3  # core helper (exprs/registry/sources) edit invalidates
 
 
+def test_resume_carries_records_given_a_relative_fixture_path(tmp_path, monkeypatch):
+    """--resume matches the fixture by absolute path: a relative sf_dir
+    argument carries the ok records of an artifact that recorded the
+    absolute one, and another fixture carries none."""
+    import json
+
+    from drive_contract import resumable_records
+
+    fixture = tmp_path / ".scale_fixtures" / "sf1"
+    fixture.mkdir(parents=True)
+    artifact = tmp_path / "CONTRACT.json"
+    artifact.write_text(json.dumps({"sf_dir": str(fixture), "queries": {
+        "q1": {"status": "ok", "fp": "a"}, "q2": {"status": "fail", "fp": "b"},
+    }}))
+    monkeypatch.chdir(tmp_path)
+    assert resumable_records(str(artifact), ".scale_fixtures/sf1") == {
+        "q1": {"status": "ok", "fp": "a"}
+    }
+    assert resumable_records(str(artifact), "./.scale_fixtures/sf1/") == {
+        "q1": {"status": "ok", "fp": "a"}
+    }
+    assert resumable_records(str(artifact), ".scale_fixtures/sf10") == {}
+    assert resumable_records(str(tmp_path / "missing.json"), str(fixture)) == {}
+
+
 def test_contract_artifacts_carry_current_fingerprints():
     """The committed contract artifacts must be resumable as-is: every 'ok'
     record's fingerprint matches the CURRENT registry, so --resume carries

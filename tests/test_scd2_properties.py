@@ -163,7 +163,7 @@ def _sink_scenario(draw):
 @example(
     scenario=(
         # day 1 split across two batches with a duplicate timestamp, then a
-        # day-2 batch carrying a day-1 straggler, with a torn swap and a
+        # day-2 batch carrying a day-1 straggler, with a torn publish and a
         # re-delivery injected
         [
             [(1, 1, 0, "a", 1.0), (1, 1, 0, "b", 2.0)],
@@ -188,7 +188,7 @@ def _sink_scenario(draw):
 def test_scd2_sink_converges_under_any_split_and_crash(spark, tmp_path_factory, scenario):
     """For ANY split of events into micro-batches — day-straddling,
     duplicate-timestamp, event-time-regressing — with re-deliveries and
-    torn swaps injected after every barrier, and crashes between the log
+    torn publishes injected after every barrier, and crashes between the log
     append and the publish, the reconcile-policy sink must land on exactly
     the change-log rebuild of the full event set."""
     import os
@@ -196,6 +196,7 @@ def test_scd2_sink_converges_under_any_split_and_crash(spark, tmp_path_factory, 
 
     from pyspark.sql import functions as F2
 
+    from t20_database_etl_pipeline_assignment_spark.streaming.commit import staging
     from t20_database_etl_pipeline_assignment_spark.streaming.scd2_sink import (
         _append_batch_log,
         recover_dim,
@@ -229,8 +230,9 @@ def test_scd2_sink_converges_under_any_split_and_crash(spark, tmp_path_factory, 
         if crash == "redeliver":
             sink(b, i)  # at-least-once re-delivery: must skip, not refold
         elif crash == "tear":
-            # crash between the two publish renames: live dir gone
-            os.rename(dim, dim + ".old")
+            # crash inside the publish's move: the committed staging dir
+            # beside a removed live dir
+            os.rename(dim, staging(dim))
     recover_dim(dim)
 
     got = sorted(

@@ -429,28 +429,6 @@ def test_stream_scd2_sink_exactly_once_across_restart(spark, sf_dir, tmp_path):
     assert got == want
 
 
-def test_scd2_sink_recovers_between_rename_crash(spark, tmp_path):
-    """Crash window between the two publish renames: live dir gone, .old
-    present. recover_dim must restore the survivor, and a fresh fold must
-    then pick up from it."""
-    import os
-
-    from t20_database_etl_pipeline_assignment_spark.streaming.scd2_sink import (
-        atomic_swap_publish,
-        recover_dim,
-    )
-
-    dim = str(tmp_path / "dim")
-    df = spark.createDataFrame([(1, "a")], "k long, v string")
-    atomic_swap_publish(df, dim, {"batch_id": 0})
-    # simulate the torn state
-    os.rename(dim, dim + ".old")
-    assert not os.path.exists(dim)
-    recover_dim(dim)
-    assert os.path.exists(dim)
-    assert spark.read.parquet(dim).collect()[0]["v"] == "a"
-
-
 def test_publish_writes_keep_caller_job_group(spark, tmp_path):
     """The publish write's jobs must carry the caller's job group, or
     per-group job counters and stage telemetry miss the publish phase."""
@@ -893,7 +871,7 @@ def test_stateful_cusum_ignores_uncalibrated_types(spark, sf_dir):
 def test_cdc_sink_out_of_order_crash_exactly_once(spark, tmp_path):
     """The CDC compaction sink: last-op-wins per key is associative, so
     out-of-order batches, same-timestamp tie-breaks split across batches,
-    torn swaps, and re-deliveries all converge to the global argmax state;
+    torn publishes, and re-deliveries all converge to the global argmax state;
     tombstones persist so an older out-of-order upsert can never resurrect
     a deleted key."""
     import datetime as dt
@@ -905,6 +883,7 @@ def test_cdc_sink_out_of_order_crash_exactly_once(spark, tmp_path):
         cdc_live_view,
         cdc_stream_sink,
     )
+    from t20_database_etl_pipeline_assignment_spark.streaming.commit import staging
     from t20_database_etl_pipeline_assignment_spark.streaming.scd2_sink import (
         recover_dim,
     )
@@ -931,7 +910,8 @@ def test_cdc_sink_out_of_order_crash_exactly_once(spark, tmp_path):
     sink(b0, 0)
     assert {r.user_id for r in cdc_live_view(spark, state).collect()} == {1, 2, 4}
     sink(b1, 1)
-    os.rename(state, state + ".old")  # torn swap
+    # torn publish: the committed staging dir beside a removed live dir
+    os.rename(state, staging(state))
     recover_dim(state)
     sink(b1, 1)  # re-delivery after recovery: must skip
     assert sink.skipped == [1]
@@ -950,8 +930,8 @@ def test_cdc_sink_out_of_order_crash_exactly_once(spark, tmp_path):
 # machinery the pointwise tests above and the hypothesis properties cover,
 # but with real mileage — ~100 generated micro-batches, duplicate
 # timestamps, cross-batch late stragglers, and a crash every few batches
-# (torn swap / re-delivery / stranded tmp / old-offset replay), asserting
-# the end state is EXACTLY the change-log rebuild. Full-size run recorded
+# (torn publish / re-delivery / stranded staging dir / old-offset replay),
+# asserting the end state is EXACTLY the change-log rebuild. Full-size run recorded
 # in SOAK_STREAMING.json by `python tools/soak_streaming.py`; the suite
 # runs a shorter default (T20_SOAK_BATCHES overrides).
 # ---------------------------------------------------------------------------

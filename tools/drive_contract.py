@@ -255,7 +255,7 @@ def _dump(json_path: str, sf: str, qids: list[str], fails: list[str],
     with open(tmp, "w") as f:
         json.dump(
             {
-                "sf_dir": sf,
+                "sf_dir": os.path.abspath(sf),
                 "driver_mem": driver_mem or "default(1g)",
                 "n_queries": len(qids),
                 "n_passed": len([q for q in qids
@@ -269,6 +269,21 @@ def _dump(json_path: str, sf: str, qids: list[str], fails: list[str],
             sort_keys=True,
         )
     os.replace(tmp, json_path)
+
+
+def resumable_records(json_path: str, sf: str) -> dict[str, dict]:
+    """The 'ok' records of the artifact at `json_path` when it was recorded
+    at the fixture `sf` — compared as absolute paths, so a relative
+    `.scale_fixtures/sf1` matches an artifact that recorded the absolute
+    one — else none."""
+    try:
+        with open(json_path) as f:
+            prev = json.load(f)
+    except (OSError, ValueError):
+        return {}
+    if not prev.get("sf_dir") or os.path.abspath(prev["sf_dir"]) != os.path.abspath(sf):
+        return {}
+    return {q: r for q, r in prev.get("queries", {}).items() if r.get("status") == "ok"}
 
 
 def main() -> int:
@@ -293,14 +308,7 @@ def main() -> int:
         if not json_path:
             print("--resume requires --json", file=sys.stderr)
             return 2
-        try:
-            with open(json_path) as f:
-                prev = json.load(f)
-            if prev.get("sf_dir") == sf:
-                carried = {q: r for q, r in prev.get("queries", {}).items()
-                           if r.get("status") == "ok"}
-        except (OSError, ValueError):
-            pass
+        carried = resumable_records(json_path, sf)
         print(f"resume: carrying {len(carried)} ok records", flush=True)
 
     # startup-only: drop index-cache trees of previous fixture generations

@@ -6,10 +6,11 @@ streaming/cdc_sink.py compaction) are property-checked over SHORT generated
 sequences in tests/test_scd2_properties.py; this harness gives the same
 machinery mileage: ~100 micro-batches of generated traffic with duplicate
 timestamps, out-of-order arrivals, cross-batch late stragglers, and a crash
-injected every few batches (torn swaps between the two publish renames,
-at-least-once re-deliveries of the current AND of older batches, stranded
-tmp-swap dirs), then asserts the end state is EXACTLY the change-log
-rebuild of the full event history and records wall/batch.
+injected every few batches (torn publishes: a committed staging dir
+beside a removed live dir; at-least-once re-deliveries of the current AND
+of older batches; staging dirs stranded without their commit marker), then
+asserts the end state is EXACTLY the change-log rebuild of the full event
+history and records wall/batch.
 
 Deterministic: all traffic and crash points derive from random.Random(seed)
 so a failure reproduces bit-for-bit from the seed recorded in the artifact.
@@ -71,12 +72,14 @@ def _gen_batches(seed: int, n_batches: int):
 
 def soak_scd2(spark, work_dir: str, n_batches: int = 100, seed: int = 20260814) -> dict:
     """Drive the reconcile-policy SCD2 sink through `n_batches` generated
-    micro-batches with a crash injected every 5th batch (cycling torn swap /
-    re-delivery / stranded tmp / old-batch re-delivery), then assert the
-    published dimension equals the one-pass change-log fold of ALL events
-    and the exactly-once bookkeeping matches the injected re-deliveries."""
+    micro-batches with a crash injected every 5th batch (cycling torn
+    publish / re-delivery / stranded staging dir / old-batch re-delivery),
+    then assert the published dimension equals the one-pass change-log fold
+    of ALL events and the exactly-once bookkeeping matches the injected
+    re-deliveries."""
     from pyspark.sql import functions as F
 
+    from t20_database_etl_pipeline_assignment_spark.streaming.commit import staging
     from t20_database_etl_pipeline_assignment_spark.streaming.scd2_sink import (
         recover_dim,
         scd2_daily_fold_spec,
@@ -98,16 +101,17 @@ def soak_scd2(spark, work_dir: str, n_batches: int = 100, seed: int = 20260814) 
         if i % 5 == 4:
             kind = crash_kinds[(i // 5) % len(crash_kinds)]
             if kind == "tear":
-                # crash between the two publish renames: live dir gone,
-                # survivor left as .old — next fold must heal it
-                os.rename(dim, dim + ".old")
+                # crash inside the publish's move: the committed staging
+                # dir beside a removed live dir — next fold rolls it forward
+                os.rename(dim, staging(dim))
             elif kind == "redeliver":
                 sink(b, i)  # at-least-once: must skip, not double-fold
                 n_redeliveries += 1
             elif kind == "stale-tmp":
-                # crash mid-write of a LOSING publisher: stranded tmp dir
-                os.makedirs(dim + ".tmp-swap", exist_ok=True)
-                with open(os.path.join(dim + ".tmp-swap", "junk"), "w") as f:
+                # crash mid-write of a publish: a staging dir without its
+                # marker — next fold deletes it
+                os.makedirs(staging(dim), exist_ok=True)
+                with open(os.path.join(staging(dim), "junk"), "w") as f:
                     f.write("stranded")
             elif kind == "redeliver-old" and i >= 3:
                 sink(dfs[i - 3], i - 3)  # older offset replay: must skip
@@ -169,15 +173,16 @@ def soak_scd2(spark, work_dir: str, n_batches: int = 100, seed: int = 20260814) 
 def soak_cdc(spark, work_dir: str, n_batches: int = 50, seed: int = 20260814) -> dict:
     """Drive the CDC compaction sink through op-coded change batches in a
     SHUFFLED batch order (compaction is order-free: per-key argmax is
-    associative+commutative), with torn swaps and re-deliveries injected,
-    then assert the compacted state equals the global last-op-wins argmax
-    over all changes."""
+    associative+commutative), with torn publishes and re-deliveries
+    injected, then assert the compacted state equals the global
+    last-op-wins argmax over all changes."""
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
     from t20_database_etl_pipeline_assignment_spark.streaming.cdc_sink import (
         cdc_stream_sink,
     )
+    from t20_database_etl_pipeline_assignment_spark.streaming.commit import staging
     from t20_database_etl_pipeline_assignment_spark.streaming.scd2_sink import (
         recover_dim,
     )
@@ -219,7 +224,7 @@ def soak_cdc(spark, work_dir: str, n_batches: int = 50, seed: int = 20260814) ->
         sink(b, i)
         if i % 6 == 5:
             if (i // 6) % 2 == 0:
-                os.rename(state, state + ".old")  # torn swap
+                os.rename(state, staging(state))  # torn publish
             else:
                 sink(b, i)  # re-delivery
                 n_redeliveries += 1
